@@ -18,7 +18,8 @@ object Capacity {
   def encoderLayerParams(d: Int, pf: Int): Long =
     4 * linearParams(d, d) + linearParams(d, pf) + linearParams(pf, d) + 4L * d
 
-  /** Full unified transformer encoder (matches EncoderWeights.init). */
+  /** Full unified transformer encoder (matches the encoder blocks of
+    * [[graft.nn.AeConfig.layout]] with maxLen = tEff). */
   def transformerEncoderParams(vocabSizes: Seq[Long], nCont: Int,
       d: Int, layers: Int, pf: Int, maxLen: Int): Long = {
     val embDim = vocabSizes.map(v => Dims.embeddingDim(v)).sum

@@ -1,8 +1,9 @@
 package graft.analyze
 
 import breeze.linalg.DenseMatrix
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+import graft.ml.{Ingress, InputColumns}
 import graft.nn.{AeConfig, TransformerAE}
 
 /**
@@ -123,85 +124,9 @@ object Explainer {
       idCol: String, seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
       targetDim: Int,
       baselineCat: Array[Array[Array[Int]]] = Array.empty,
-      baselineCont: Array[Array[Array[Double]]] = Array.empty): DataFrame = {
-    require(baselineCat.length == baselineCont.length,
-      "baselineCat and baselineCont must have the same number of samples")
-    val spark = wide.sparkSession
-    val lay = cfg.layout
-    val bc = spark.sparkContext.broadcast(params)
-    val t = cfg.seqLen
-    val nCat = seqCatCols.size
-    val nCont = seqContCols.size
-    val embDims = cfg.embDims
-    val embSum = embDims.sum
-    val nBase = baselineCat.length
-    val bcBase = spark.sparkContext.broadcast((baselineCat, baselineCont))
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols)
-    val outNames: Seq[String] =
-      seqCatCols.flatten.map(n => s"attr_$n") ++ seqContCols.flatten.map(n => s"attr_$n")
-    val outSchema = StructType(
-      proj.schema(0) +: outNames.map(StructField(_, DoubleType, nullable = false)))
-
-    proj.mapPartitions { rows =>
-      val p = bc.value
-      val (bCat, bCont) = bcBase.value
-      val seed = DenseMatrix.zeros[Double](cfg.tEff, cfg.dModel)
-      seed(targetDim / cfg.dModel, targetDim % cfg.dModel) = 1.0
-      // mean baseline in embedding/cont space (zero matrices when nBase=0)
-      val embBase = DenseMatrix.zeros[Double](t, embSum)
-      val contBase = Array.ofDim[Double](t, nCont)
-      for (s <- 0 until nBase) {
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(bCat(s)(i)(c), 0), table.rows - 1)
-            embBase(i, off until off + embDims(c)) :+= (table(code, ::).t / nBase.toDouble).t
-            off += embDims(c)
-          }
-          for (c <- 0 until nCont) contBase(i)(c) += bCont(s)(i)(c) / nBase
-        }
-      }
-      rows.map { row =>
-        val cat = graft.ml.Ingress.seqCatOf(row, t, nCat)
-        val x = graft.ml.Ingress.seqContOf(row, t, nCat, nCont)
-        val embX = DenseMatrix.zeros[Double](t, embSum)
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(cat(i)(c), 0), table.rows - 1)
-            embX(i, off until off + embDims(c)) := table(code, ::)
-            off += embDims(c)
-          }
-        }
-        val scratch = new Array[Double](lay.totalSize)
-        val gradCont = Array.ofDim[Double](t, nCont)
-        val gradEmb = DenseMatrix.zeros[Double](t, embSum)
-        // ONE backward at the input point — the captum-faithful multiplier
-        TransformerAE.lossAndGrad(cfg, lay, p, scratch, cat, x,
-          encSeed = seed, contGradOut = gradCont,
-          seqEmbInput = embX, seqEmbGradOut = gradEmb)
-        val out = new Array[Any](1 + nCat * t + nCont * t)
-        out(0) = row.get(0)
-        var idx = 1
-        var off = 0
-        for (c <- 0 until nCat) {
-          for (i <- 0 until t) {
-            var s = 0.0
-            for (j <- off until off + embDims(c))
-              s += (embX(i, j) - embBase(i, j)) * gradEmb(i, j)
-            out(idx) = s; idx += 1
-          }
-          off += embDims(c)
-        }
-        for (c <- 0 until nCont; i <- 0 until t) {
-          out(idx) = (x(i)(c) - contBase(i)(c)) * gradCont(i)(c); idx += 1
-        }
-        Row.fromSeq(out.toIndexedSeq)
-      }
-    }(Encoders.row(outSchema))
-  }
+      baselineCont: Array[Array[Array[Double]]] = Array.empty): DataFrame =
+    deepLiftAll(wide, cfg, params, idCol, seqCatCols, seqContCols, Seq(targetDim),
+      baselineCat, baselineCont).drop("target_dim")
 
   /**
    * The reference `explain()` loop (CASPRExplainer.py:258-272): attribute
@@ -226,118 +151,60 @@ object Explainer {
     val lay = cfg.layout
     val bc = spark.sparkContext.broadcast(params)
     val t = cfg.seqLen
-    val nCat = seqCatCols.size
     val nCont = seqContCols.size
-    val embDims = cfg.embDims
-    val embSum = embDims.sum
+    val embSum = cfg.embDims.sum
     val nBase = baselineCat.length
     val bcBase = spark.sparkContext.broadcast((baselineCat, baselineCont))
     val dims = targetDims.toArray
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols)
-    val outNames: Seq[String] =
-      seqCatCols.flatten.map(n => s"attr_$n") ++ seqContCols.flatten.map(n => s"attr_$n")
-    val outSchema = StructType(
-      proj.schema(0) +: StructField("target_dim", LongType, nullable = false) +:
-        outNames.map(StructField(_, DoubleType, nullable = false)))
-
-    proj.mapPartitions { rows =>
+    Ingress.mapEntities(wide, idCol, InputColumns(seqCatCols, seqContCols),
+      StructField("target_dim", LongType, nullable = false) +:
+        attrFields(seqCatCols, seqContCols)) { () =>
       val p = bc.value
       val (bCat, bCont) = bcBase.value
+      // mean baseline in embedding/cont space (zero matrices when nBase=0)
       val embBase = DenseMatrix.zeros[Double](t, embSum)
       val contBase = Array.ofDim[Double](t, nCont)
       for (s <- 0 until nBase) {
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(bCat(s)(i)(c), 0), table.rows - 1)
-            embBase(i, off until off + embDims(c)) :+= (table(code, ::).t / nBase.toDouble).t
-            off += embDims(c)
-          }
-          for (c <- 0 until nCont) contBase(i)(c) += bCont(s)(i)(c) / nBase
-        }
+        embBase :+= TransformerAE.seqEmbeddings(cfg, lay, p, bCat(s)) / nBase.toDouble
+        for (i <- 0 until t; c <- 0 until nCont) contBase(i)(c) += bCont(s)(i)(c) / nBase
       }
-      rows.flatMap { row =>
-        val cat = graft.ml.Ingress.seqCatOf(row, t, nCat)
-        val x = graft.ml.Ingress.seqContOf(row, t, nCat, nCont)
-        val embX = DenseMatrix.zeros[Double](t, embSum)
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(cat(i)(c), 0), table.rows - 1)
-            embX(i, off until off + embDims(c)) := table(code, ::)
-            off += embDims(c)
-          }
-        }
+      e => {
+        val embX = TransformerAE.seqEmbeddings(cfg, lay, p, e.seqCat)
         dims.iterator.map { dim =>
           val seed = DenseMatrix.zeros[Double](cfg.tEff, cfg.dModel)
           seed(dim / cfg.dModel, dim % cfg.dModel) = 1.0
           val scratch = new Array[Double](lay.totalSize)
           val gradCont = Array.ofDim[Double](t, nCont)
           val gradEmb = DenseMatrix.zeros[Double](t, embSum)
-          TransformerAE.lossAndGrad(cfg, lay, p, scratch, cat, x,
+          // ONE backward at the input point — the captum-faithful multiplier
+          TransformerAE.lossAndGrad(cfg, lay, p, scratch, e.seqCat, e.seqCont,
             encSeed = seed, contGradOut = gradCont,
             seqEmbInput = embX, seqEmbGradOut = gradEmb)
-          val out = new Array[Any](2 + nCat * t + nCont * t)
-          out(0) = row.get(0)
-          out(1) = dim.toLong
-          var idx = 2
-          var off = 0
-          for (c <- 0 until nCat) {
-            for (i <- 0 until t) {
-              var s = 0.0
-              for (j <- off until off + embDims(c))
-                s += (embX(i, j) - embBase(i, j)) * gradEmb(i, j)
-              out(idx) = s; idx += 1
-            }
-            off += embDims(c)
-          }
-          for (c <- 0 until nCont; i <- 0 until t) {
-            out(idx) = (x(i)(c) - contBase(i)(c)) * gradCont(i)(c); idx += 1
-          }
-          Row.fromSeq(out.toIndexedSeq)
+          (dim.toLong: Any) +: attrValues(cfg, nCont,
+            (i, j) => (embX(i, j) - embBase(i, j)) * gradEmb(i, j),
+            (i, c) => (e.seqCont(i)(c) - contBase(i)(c)) * gradCont(i)(c))
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   def integratedGradients(wide: DataFrame, cfg: AeConfig, params: Array[Double],
       idCol: String, seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
       targetDim: Int, steps: Int = 32): DataFrame = {
-    val spark = wide.sparkSession
     val lay = cfg.layout
-    val bc = spark.sparkContext.broadcast(params)
+    val bc = wide.sparkSession.sparkContext.broadcast(params)
     val t = cfg.seqLen
-    val nCat = seqCatCols.size
     val nCont = seqContCols.size
-    val embDims = cfg.embDims
-    val embSum = embDims.sum
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols)
-    // output order: per cat col its T wide names, then per cont col its T
-    val outNames: Seq[String] =
-      seqCatCols.flatten.map(n => s"attr_$n") ++ seqContCols.flatten.map(n => s"attr_$n")
-    val outSchema = StructType(
-      proj.schema(0) +: outNames.map(StructField(_, DoubleType, nullable = false)))
-
-    proj.mapPartitions { rows =>
+    val embSum = cfg.embDims.sum
+    Ingress.mapEntities(wide, idCol, InputColumns(seqCatCols, seqContCols),
+      attrFields(seqCatCols, seqContCols)) { () =>
       val p = bc.value
       val seed = DenseMatrix.zeros[Double](cfg.tEff, cfg.dModel)
       seed(targetDim / cfg.dModel, targetDim % cfg.dModel) = 1.0
-      rows.map { row =>
-        val cat = graft.ml.Ingress.seqCatOf(row, t, nCat)
-        val x = graft.ml.Ingress.seqContOf(row, t, nCat, nCont)
+      e => {
+        val x = e.seqCont
         // the row's full-strength embedding vectors (the IG endpoint)
-        val embX = DenseMatrix.zeros[Double](t, embSum)
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(cat(i)(c), 0), table.rows - 1)
-            embX(i, off until off + embDims(c)) := table(code, ::)
-            off += embDims(c)
-          }
-        }
+        val embX = TransformerAE.seqEmbeddings(cfg, lay, p, e.seqCat)
         val accCont = Array.ofDim[Double](t, nCont)
         val accEmb = DenseMatrix.zeros[Double](t, embSum)
         val scratch = new Array[Double](lay.totalSize)
@@ -348,7 +215,7 @@ object Explainer {
           val xi = Array.tabulate(t, nCont)((i, j) => x(i)(j) * alpha)
           val embI = embX * alpha
           java.util.Arrays.fill(scratch, 0.0)
-          TransformerAE.lossAndGrad(cfg, lay, p, scratch, cat, xi,
+          TransformerAE.lossAndGrad(cfg, lay, p, scratch, e.seqCat, xi,
             encSeed = seed, contGradOut = gradCont,
             seqEmbInput = embI, seqEmbGradOut = gradEmb)
           for (i <- 0 until t; j <- 0 until nCont) accCont(i)(j) += gradCont(i)(j)
@@ -356,23 +223,35 @@ object Explainer {
         }
         // cat attribution: sum over the variable's embedding dims
         // (_aggregate_cat_attributions_util); cont: straight product
-        val out = new Array[Any](1 + nCat * t + nCont * t)
-        out(0) = row.get(0)
-        var idx = 1
-        var off = 0
-        for (c <- 0 until nCat) {
-          for (i <- 0 until t) {
-            var s = 0.0
-            for (j <- off until off + embDims(c)) s += embX(i, j) * accEmb(i, j) / steps
-            out(idx) = s; idx += 1
-          }
-          off += embDims(c)
-        }
-        for (c <- 0 until nCont; i <- 0 until t) {
-          out(idx) = x(i)(c) * accCont(i)(c) / steps; idx += 1
-        }
-        Row.fromSeq(out.toIndexedSeq)
+        Iterator.single(attrValues(cfg, nCont,
+          (i, j) => embX(i, j) * accEmb(i, j) / steps,
+          (i, c) => x(i)(c) * accCont(i)(c) / steps))
       }
-    }(Encoders.row(outSchema))
+    }
+  }
+
+  /** Output order: per cat col its T wide names, then per cont col its T. */
+  private def attrFields(seqCatCols: Seq[Seq[String]],
+      seqContCols: Seq[Seq[String]]): Seq[StructField] =
+    (seqCatCols.flatten ++ seqContCols.flatten)
+      .map(n => StructField(s"attr_$n", DoubleType, nullable = false))
+
+  /** Attribution values in [[attrFields]] order: a cat variable's
+    * attribution is the sum of `catAttr(timestep, embedding column)` over
+    * its embedding dims; `contAttr(timestep, cont col)` is taken as is. */
+  private def attrValues(cfg: AeConfig, nCont: Int, catAttr: (Int, Int) => Double,
+      contAttr: (Int, Int) => Double): Seq[Double] = {
+    val out = Seq.newBuilder[Double]
+    var off = 0
+    for (d <- cfg.embDims) {
+      for (i <- 0 until cfg.seqLen) {
+        var s = 0.0
+        for (j <- off until off + d) s += catAttr(i, j)
+        out += s
+      }
+      off += d
+    }
+    for (c <- 0 until nCont; i <- 0 until cfg.seqLen) out += contAttr(i, c)
+    out.result()
   }
 }

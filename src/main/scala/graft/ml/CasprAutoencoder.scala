@@ -23,11 +23,11 @@ import graft.train.{TrainConfig, TransformerTrainer}
  *
  * `fit` runs [[graft.train.TransformerTrainer.fit]] (broadcast weights +
  * treeAggregate grads — the J1/J2/J5 loop); the fitted [[CasprModel]]
- * scores via the same typed-mapPartitions path the standalone trainer
- * exposes, appending `embedding: array<float>`. Column lists derive from
- * the base feature names × cfg.seqLen exactly like
- * [[CasprScorer.forWide]], so the stage drops onto [[CasprStage]] output
- * unchanged.
+ * scores through [[CasprScorerModel]] — the same harness and encoder
+ * forward as the seeded scorer and the standalone trainer — appending
+ * `embedding: array<float>`. Column lists derive from the base feature
+ * names × cfg.seqLen exactly like [[CasprScorer.forWide]], so the stage
+ * drops onto [[CasprStage]] output unchanged.
  *
  * [[CasprModel]] is `MLWritable` (reference checkpoints state_dicts,
  * early_stopping.py:66-70): weights go through [[Persist.saveParams]]
@@ -60,7 +60,7 @@ class CasprAutoencoder(
       examplesPerEpoch, uid)
 
   override def transformSchema(schema: StructType): StructType =
-    CasprModel.outSchema(schema, idCol)
+    EmbeddingStage.outSchema(schema)
 }
 
 /** The fitted autoencoder as an MLlib `Model`: APPENDS the entity
@@ -69,8 +69,7 @@ class CasprAutoencoder(
   * embedding itself is computed on the codegen-narrowed Ingress projection
   * and joined back on `idCol` (the wide table is entity-keyed, one row per
   * id, so the join is key-unique); callers that want the minimal
-  * (id, embedding) scan shape use [[graft.train.TransformerTrainer
-  * .transform]] directly. */
+  * (id, embedding) scan shape use [[CasprScorerModel]] directly. */
 class CasprModel(
     val cfg: AeConfig,
     val weights: Array[Double],
@@ -78,24 +77,16 @@ class CasprModel(
     val seqCat: Seq[String],
     val seqCont: Seq[String],
     override val uid: String = Identifiable.randomUID("casprModel"))
-    extends Model[CasprModel] with MLWritable {
+    extends Model[CasprModel] with EmbeddingStage with MLWritable {
 
   private def cols(names: Seq[String]): Seq[Seq[String]] =
     names.map(c => (1 to cfg.seqLen).map(t => s"${c}_$t"))
 
-  override def transform(ds: Dataset[_]): DataFrame = {
-    val df = ds.toDF()
-    val emb = TransformerTrainer.transform(df,
-      TransformerTrainer.Result(cfg, weights, Nil, 0),
-      idCol, cols(seqCat), cols(seqCont))
-    df.join(emb, Seq(idCol))
-  }
+  override protected def score(df: DataFrame): DataFrame =
+    CasprScorerModel(cfg, weights, idCol, cols(seqCat), cols(seqCont)).transform(df)
 
   override def copy(extra: ParamMap): CasprModel =
     new CasprModel(cfg, weights, idCol, seqCat, seqCont, uid)
-
-  override def transformSchema(schema: StructType): StructType =
-    CasprModel.outSchema(schema, idCol)
 
   /** A4 persistence: params via [[Persist.saveParams]], config as
     * key=value lines. */
@@ -129,10 +120,6 @@ class CasprModel(
 }
 
 object CasprModel extends MLReadable[CasprModel] {
-
-  private[ml] def outSchema(input: StructType, idCol: String): StructType =
-    StructType(input.fields.toIndexedSeq :+
-      StructField("embedding", ArrayType(FloatType, containsNull = false)))
 
   override def read: MLReader[CasprModel] = new MLReader[CasprModel] {
     override def load(path: String): CasprModel = {

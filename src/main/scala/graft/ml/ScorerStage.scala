@@ -4,18 +4,18 @@ import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Thin `ml.Transformer` adapters completing the idiomatic MLlib surface
- * (SURVEY.md §7.1): the deterministic scorer models ([[CasprScorerModel]]
- * transformer arch, [[LstmScorerModel]] LSTM arch — the J6 serving path
- * with externally supplied weights) drop into an
+ * (SURVEY.md §7.1): the scorer models ([[CasprScorerModel]] transformer
+ * arch over `AeConfig` flat params, seeded or trained; [[LstmScorerModel]]
+ * LSTM arch over `LstmEncoderWeights` — the J6 serving path) drop into an
  * `org.apache.spark.ml.Pipeline` next to [[CasprStage]] and
- * [[CasprAutoencoder]]. Like [[CasprModel]], the stage APPENDS
- * `embedding: array<float>` to the input row (computed on the narrowed
- * Ingress projection, joined back on the entity-unique id), so labels and
- * profile columns flow through to downstream MLlib stages.
+ * [[CasprAutoencoder]]. Like [[CasprModel]] (an EmbeddingStage too), the
+ * stage APPENDS `embedding: array<float>` to the input row (computed on
+ * the narrowed Ingress projection, joined back on the entity-unique id),
+ * so labels and profile columns flow through to downstream MLlib stages.
  */
 private[ml] trait EmbeddingStage extends Transformer {
   def idCol: String
@@ -28,8 +28,12 @@ private[ml] trait EmbeddingStage extends Transformer {
   }
 
   override def transformSchema(schema: StructType): StructType =
-    StructType(schema.fields.toIndexedSeq :+
-      StructField("embedding", ArrayType(FloatType, containsNull = false)))
+    EmbeddingStage.outSchema(schema)
+}
+
+private[ml] object EmbeddingStage {
+  def outSchema(input: StructType): StructType =
+    StructType(input.fields.toIndexedSeq :+ Ingress.EmbeddingField)
 }
 
 /** [[CasprScorerModel]] (transformer encoder, I8 extra-timestep non-seq

@@ -201,6 +201,25 @@ final case class AeConfig(
     }
 }
 
+/**
+ * The transformer autoencoder over flat params, mirroring the reference
+ * semantics:
+ *  - per-categorical-column embedding tables, dim = min(25, (vocab+1)/2)
+ *    (reference: caspr/models/factory.py:63-64, embedding_layer.py:8-51)
+ *  - unified encoder: seq cat embeddings ++ seq cont -> linear_seq -> d;
+ *    non-seq (cat emb ++ cont) -> linear_non_seq appended as ONE extra
+ *    timestep (reference: unified_transformer_encoder.py:18-114, append at
+ *    :94-96; adjust_seq_len = seq_len+1, factory.py:43)
+ *  - input scaled by sqrt(d), learned positional embedding, N x
+ *    (self-attention + FFN, post-LN residuals), all-ones no-op mask
+ *    (reference: transformer.py:62-132; scale :95,122; mask :97-103)
+ *  - serving embedding = enc_src flattened to (T+1)*d
+ *    (reference: caspr/utils/spark/score.py:55-57)
+ *
+ * One encoder forward ([[encode]]) serves training ([[lossAndGrad]]),
+ * scoring with trained weights, and the seeded scorer
+ * (graft.ml.CasprScorer, weights from [[AeConfig.initParams]]).
+ */
 object TransformerAE {
 
   private val LnEps = 1e-5
@@ -254,14 +273,151 @@ object TransformerAE {
     dX
   }
 
-  private def softmaxRows(m: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val out = m.copy
-    for (i <- 0 until m.rows) {
-      val row = out(i, ::).t
-      val e = exp(row - max(row))
-      out(i, ::) := (e / sum(e)).t
+  private def masked(m: DenseMatrix[Double], mask: DenseMatrix[Double]): DenseMatrix[Double] =
+    if (mask == null) m else m *:* mask
+
+  /** Inverted-dropout masks of one encoder layer; null = identity. */
+  private final case class LayerMasks(attn: DenseMatrix[Double],
+      ffIn: DenseMatrix[Double], ff: DenseMatrix[Double])
+
+  /** Inverted-dropout masks of one encoder pass; null = identity. */
+  private final case class EncoderMasks(emb: DenseMatrix[Double],
+      ns: DenseVector[Double], in: DenseMatrix[Double], layers: Array[LayerMasks]) {
+    def layer(l: Int): LayerMasks = if (layers == null) NoLayerMasks else layers(l)
+  }
+  private val NoLayerMasks = LayerMasks(null, null, null)
+  /** The serving pass: no dropout. */
+  private val NoMasks = EncoderMasks(null, null, null, null)
+
+  /** Encoder-layer activations the backward pass reads. */
+  private final case class LayerCache(x: DenseMatrix[Double], q: DenseMatrix[Double],
+      k: DenseMatrix[Double], v: DenseMatrix[Double],
+      attn: Array[DenseMatrix[Double]], ctx: DenseMatrix[Double],
+      res1Pre: DenseMatrix[Double], res1: DenseMatrix[Double],
+      ln1Xhat: DenseMatrix[Double], ln1Inv: Array[Double],
+      ffPre: DenseMatrix[Double], ffAct: DenseMatrix[Double],
+      res2Pre: DenseMatrix[Double],
+      ln2Xhat: DenseMatrix[Double], ln2Inv: Array[Double],
+      out: DenseMatrix[Double])
+
+  /** One encoder pass: the (dropped) seq and non-seq input rows, the
+    * projected src before scale/pos, per-layer caches, and the output. */
+  private final case class Encoded(x0: DenseMatrix[Double], nsx0: DenseVector[Double],
+      srcProj: DenseMatrix[Double], caches: Array[LayerCache], enc: DenseMatrix[Double])
+
+  /** The seq cat embedding vectors of one entity (T x sum(embDims)):
+    * per timestep, each column's table row for its (clamped) code. */
+  def seqEmbeddings(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
+      catCodes: Array[Array[Int]]): DenseMatrix[Double] = {
+    val embDims = cfg.embDims
+    val out = DenseMatrix.zeros[Double](cfg.seqLen, embDims.sum)
+    for (i <- 0 until cfg.seqLen) {
+      var off = 0
+      for (c <- embDims.indices) {
+        val table = lay.mat(s"emb$c", p)
+        val code = math.min(math.max(catCodes(i)(c), 0), table.rows - 1)
+        out(i, off until off + embDims(c)) := table(code, ::)
+        off += embDims(c)
+      }
     }
     out
+  }
+
+  /**
+   * THE encoder forward, shared by training ([[lossAndGrad]], with its
+   * dropout masks) and serving ([[embed]], [[NoMasks]]). `seqEmbInput`
+   * (T x sum(embDims)), when non-null, replaces the seq cat embedding lookup.
+   */
+  private def encode(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
+      catCodes: Array[Array[Int]], cont: Array[Array[Double]],
+      nsCat: Array[Int], nsCont: Array[Double],
+      seqEmbInput: DenseMatrix[Double], masks: EncoderMasks): Encoded = {
+    val t = cfg.seqLen
+    val tE = cfg.tEff
+    val d = cfg.dModel
+    val embSum = cfg.embDims.sum
+    val x0 = DenseMatrix.zeros[Double](t, cfg.inDim)
+    x0(::, 0 until embSum) :=
+      (if (seqEmbInput != null) seqEmbInput else seqEmbeddings(cfg, lay, p, catCodes))
+    for (i <- 0 until t; c <- 0 until cfg.nCont) x0(i, embSum + c) = cont(i)(c)
+    // EMBEDDING_DROPOUT_SEQUENTIAL (factory.py:77): x0 is stored DROPPED so
+    // the projection forward/backward consume the dropped activations
+    if (masks.emb != null) x0 :*= masks.emb
+
+    // non-seq input row (cat emb ++ cont), unified_transformer_encoder.py:91-96
+    val nsx0: DenseVector[Double] =
+      if (!cfg.hasNonSeq) null
+      else {
+        val nsEmbDims = cfg.nsEmbDims
+        val v = DenseVector.zeros[Double](cfg.nsInDim)
+        var off = 0
+        for (c <- nsEmbDims.indices) {
+          val table = lay.mat(s"nsEmb$c", p)
+          val code = math.min(math.max(if (nsCat != null) nsCat(c) else 0, 0), table.rows - 1)
+          v(off until off + nsEmbDims(c)) := table(code, ::).t
+          off += nsEmbDims(c)
+        }
+        for (c <- 0 until cfg.nNonSeqCont)
+          v(nsEmbDims.sum + c) = if (nsCont != null) nsCont(c) else 0.0
+        v
+      }
+    // EMBEDDING_DROPOUT_NON_SEQUENTIAL (factory.py:78)
+    if (masks.ns != null) nsx0 :*= masks.ns
+
+    // projected src (pre scale/pos): seq rows through linear_seq, non-seq
+    // row through linear_non_seq appended last
+    val srcProj = DenseMatrix.zeros[Double](tE, d)
+    locally {
+      val m = x0 * lay.mat("linSeq_w", p)
+      m(*, ::) :+= lay.vec("linSeq_b", p)
+      srcProj(0 until t, ::) := m
+      if (cfg.hasNonSeq) {
+        val wNs = lay.mat("linNonSeq_w", p); val bNs = lay.vec("linNonSeq_b", p)
+        srcProj(t, ::) := ((wNs.t * nsx0) + bNs).t
+      }
+    }
+    // src = dropout(src * scale + pos) (transformer.py:122)
+    var h = {
+      val m = srcProj.copy
+      m :*= math.sqrt(d.toDouble)
+      m += lay.mat("pos", p)
+      masked(m, masks.in)
+    }
+    val caches = new Array[LayerCache](cfg.layers)
+    val hd = cfg.headDim
+    for (l <- 0 until cfg.layers) {
+      def m(n: String) = lay.mat(s"l${l}_${n}_w", p)
+      def b(n: String) = lay.vec(s"l${l}_${n}_b", p)
+      val lm = masks.layer(l)
+      val q = h * m("wq"); q(*, ::) :+= b("wq")
+      val k = h * m("wk"); k(*, ::) :+= b("wk")
+      val v = h * m("wv"); v(*, ::) :+= b("wv")
+      val ctx = DenseMatrix.zeros[Double](tE, d)
+      val attns = new Array[DenseMatrix[Double]](cfg.heads)
+      for (hh <- 0 until cfg.heads) {
+        val sl = hh * hd until (hh + 1) * hd
+        val a = Layers.softmaxRows((q(::, sl) * k(::, sl).t) / math.sqrt(hd.toDouble))
+        attns(hh) = a
+        ctx(::, sl) := a * v(::, sl)
+      }
+      val attnOut = ctx * m("wo"); attnOut(*, ::) :+= b("wo")
+      // src = ln(src + dropout(attn)) (transformer.py:46-47)
+      val res1Pre = h + masked(attnOut, lm.attn)
+      val (res1, ln1Xhat, ln1Inv) =
+        lnFwd(res1Pre, lay.vec(s"l${l}_ln1_g", p), lay.vec(s"l${l}_ln1_b", p))
+      val ffPre = res1 * m("ff1"); ffPre(*, ::) :+= b("ff1")
+      // x = dropout(relu(fc1(x))) (transformer.py:158); cached DROPPED
+      val ffAct = masked(relu(ffPre), lm.ffIn)
+      val ff = ffAct * m("ff2"); ff(*, ::) :+= b("ff2")
+      // src = ln(src + dropout(ff)) (transformer.py:54-55)
+      val res2Pre = res1 + masked(ff, lm.ff)
+      val (out, ln2Xhat, ln2Inv) =
+        lnFwd(res2Pre, lay.vec(s"l${l}_ln2_g", p), lay.vec(s"l${l}_ln2_b", p))
+      caches(l) = LayerCache(h, q, k, v, attns, ctx, res1Pre, res1, ln1Xhat,
+        ln1Inv, ffPre, ffAct, res2Pre, ln2Xhat, ln2Inv, out)
+      h = out
+    }
+    Encoded(x0, nsx0, srcProj, caches, h)
   }
 
   /**
@@ -314,128 +470,23 @@ object TransformerAE {
       if (pDrop <= 0) null
       else DenseMatrix.tabulate(r, c)((_, _) =>
         if (dropRng.nextDouble() < pDrop) 0.0 else 1.0 / (1.0 - pDrop))
-    def masked(mm: DenseMatrix[Double], mask: DenseMatrix[Double]): DenseMatrix[Double] =
-      if (mask == null) mm else mm *:* mask
 
     // ---- forward -------------------------------------------------------
+    // masks drawn in the fixed order emb, ns, input, then per layer
+    // attn, ffIn, ff; the decoder's draws follow
+    val masks =
+      if (pDrop <= 0) NoMasks
+      else EncoderMasks(dropMask(t, cfg.inDim),
+        if (!cfg.hasNonSeq) null
+        else DenseVector.tabulate(cfg.nsInDim)(_ =>
+          if (dropRng.nextDouble() < pDrop) 0.0 else 1.0 / (1.0 - pDrop)),
+        dropMask(tE, d),
+        Array.tabulate(cfg.layers)(_ =>
+          LayerMasks(dropMask(tE, d), dropMask(tE, cfg.pf), dropMask(tE, d))))
+    val Encoded(x0, nsx0, srcProj, caches, enc) =
+      encode(cfg, lay, p, catCodes, cont, nsCat, nsCont, seqEmbInput, masks)
     val embDims = cfg.embDims
-    val x0 = DenseMatrix.zeros[Double](t, cfg.inDim)
-    for (i <- 0 until t) {
-      var off = 0
-      for (c <- 0 until nCat) {
-        if (seqEmbInput != null)
-          x0(i, off until off + embDims(c)) := seqEmbInput(i, off until off + embDims(c))
-        else {
-          val table = lay.mat(s"emb$c", p)
-          val code = math.min(math.max(catCodes(i)(c), 0), table.rows - 1)
-          x0(i, off until off + embDims(c)) := table(code, ::)
-        }
-        off += embDims(c)
-      }
-      for (c <- 0 until cfg.nCont) x0(i, embDims.sum + c) = cont(i)(c)
-    }
-    // EMBEDDING_DROPOUT_SEQUENTIAL (factory.py:77): x0 is stored DROPPED so
-    // the projection forward/backward consume the dropped activations
-    val embMask = dropMask(t, cfg.inDim)
-    if (embMask != null) x0 :*= embMask
-    val wSeq = lay.mat("linSeq_w", p); val bSeq = lay.vec("linSeq_b", p)
-
-    // non-seq input row (cat emb ++ cont), unified_transformer_encoder.py:91-96
     val nsEmbDims = cfg.nsEmbDims
-    val nsx0: DenseVector[Double] =
-      if (!cfg.hasNonSeq) null
-      else {
-        val v = DenseVector.zeros[Double](cfg.nsInDim)
-        var off = 0
-        for (c <- 0 until nNsCat) {
-          val table = lay.mat(s"nsEmb$c", p)
-          val code = math.min(math.max(if (nsCat != null) nsCat(c) else 0, 0), table.rows - 1)
-          v(off until off + nsEmbDims(c)) := table(code, ::).t
-          off += nsEmbDims(c)
-        }
-        for (c <- 0 until cfg.nNonSeqCont)
-          v(nsEmbDims.sum + c) = if (nsCont != null) nsCont(c) else 0.0
-        v
-      }
-    // EMBEDDING_DROPOUT_NON_SEQUENTIAL (factory.py:78)
-    val nsMask: DenseVector[Double] =
-      if (pDrop <= 0 || nsx0 == null) null
-      else DenseVector.tabulate(cfg.nsInDim)(_ =>
-        if (dropRng.nextDouble() < pDrop) 0.0 else 1.0 / (1.0 - pDrop))
-    if (nsMask != null) nsx0 :*= nsMask
-
-    // projected src (pre scale/pos): seq rows through linear_seq, non-seq
-    // row through linear_non_seq appended last
-    val srcProj = DenseMatrix.zeros[Double](tE, d)
-    locally {
-      val m = x0 * wSeq
-      m(*, ::) :+= bSeq
-      srcProj(0 until t, ::) := m
-      if (cfg.hasNonSeq) {
-        val wNs = lay.mat("linNonSeq_w", p); val bNs = lay.vec("linNonSeq_b", p)
-        srcProj(t, ::) := ((wNs.t * nsx0) + bNs).t
-      }
-    }
-    // src = dropout(src * scale + pos) (transformer.py:122)
-    val inMask = dropMask(tE, d)
-    val h0 = {
-      val m = srcProj.copy
-      m :*= scale
-      m += lay.mat("pos", p)
-      masked(m, inMask)
-    }
-    // per-layer caches
-    final case class LayerCache(x: DenseMatrix[Double], q: DenseMatrix[Double],
-        k: DenseMatrix[Double], v: DenseMatrix[Double],
-        attn: Array[DenseMatrix[Double]], ctx: DenseMatrix[Double],
-        res1Pre: DenseMatrix[Double], res1: DenseMatrix[Double],
-        ln1Xhat: DenseMatrix[Double], ln1Inv: Array[Double],
-        ffPre: DenseMatrix[Double], ffAct: DenseMatrix[Double],
-        res2Pre: DenseMatrix[Double],
-        ln2Xhat: DenseMatrix[Double], ln2Inv: Array[Double],
-        out: DenseMatrix[Double])
-    val caches = new Array[LayerCache](cfg.layers)
-    val encAttnMask = new Array[DenseMatrix[Double]](cfg.layers)
-    val encFfInMask = new Array[DenseMatrix[Double]](cfg.layers)
-    val encFfMask = new Array[DenseMatrix[Double]](cfg.layers)
-    var h = h0
-    for (l <- 0 until cfg.layers) {
-      def m(n: String) = lay.mat(s"l${l}_${n}_w", p)
-      def b(n: String) = lay.vec(s"l${l}_${n}_b", p)
-      val q = h * m("wq"); q(*, ::) :+= b("wq")
-      val k = h * m("wk"); k(*, ::) :+= b("wk")
-      val v = h * m("wv"); v(*, ::) :+= b("wv")
-      val hd = cfg.headDim
-      val ctx = DenseMatrix.zeros[Double](tE, d)
-      val attns = new Array[DenseMatrix[Double]](cfg.heads)
-      for (hh <- 0 until cfg.heads) {
-        val sl = hh * hd until (hh + 1) * hd
-        val scores = (q(::, sl) * k(::, sl).t) / math.sqrt(hd.toDouble)
-        val a = softmaxRows(scores)
-        attns(hh) = a
-        ctx(::, sl) := a * v(::, sl)
-      }
-      val attnOut = ctx * m("wo"); attnOut(*, ::) :+= b("wo")
-      encAttnMask(l) = dropMask(tE, d)
-      // src = ln(src + dropout(attn)) (transformer.py:46-47)
-      val res1Pre = h + masked(attnOut, encAttnMask(l))
-      val (res1, ln1Xhat, ln1Inv) =
-        lnFwd(res1Pre, lay.vec(s"l${l}_ln1_g", p), lay.vec(s"l${l}_ln1_b", p))
-      val ffPre = res1 * m("ff1"); ffPre(*, ::) :+= b("ff1")
-      encFfInMask(l) = dropMask(tE, cfg.pf)
-      // x = dropout(relu(fc1(x))) (transformer.py:158); cached DROPPED
-      val ffAct = masked(relu(ffPre), encFfInMask(l))
-      val ff = ffAct * m("ff2"); ff(*, ::) :+= b("ff2")
-      encFfMask(l) = dropMask(tE, d)
-      // src = ln(src + dropout(ff)) (transformer.py:54-55)
-      val res2Pre = res1 + masked(ff, encFfMask(l))
-      val (out, ln2Xhat, ln2Inv) =
-        lnFwd(res2Pre, lay.vec(s"l${l}_ln2_g", p), lay.vec(s"l${l}_ln2_b", p))
-      caches(l) = LayerCache(h, q, k, v, attns, ctx, res1Pre, res1, ln1Xhat,
-        ln1Inv, ffPre, ffAct, res2Pre, ln2Xhat, ln2Inv, out)
-      h = out
-    }
-    val enc = h
 
     // heads on `x` (enc, or decoder output; tE rows): seq CE/MSE on the seq
     // timesteps, non-seq CE/MSE on the LAST timestep (OutputLayer split,
@@ -447,7 +498,7 @@ object TransformerAE {
       for (c <- 0 until nCat) {
         val w = lay.mat(s"headCat${c}_w", p); val b = lay.vec(s"headCat${c}_b", p)
         val logits = xSeq * w; logits(*, ::) :+= b
-        val probs = softmaxRows(logits)
+        val probs = Layers.softmaxRows(logits)
         val dLogits = probs.copy
         for (i <- 0 until t) {
           val y = math.min(math.max(catCodes(i)(c), 0), w.cols - 1)
@@ -583,7 +634,7 @@ object TransformerAE {
           val sl = hh * hd until (hh + 1) * hd
           val scores = (sq(::, sl) * sk(::, sl).t) / math.sqrt(hd.toDouble)
           for (i <- 0 until tE; j <- i + 1 until tE) scores(i, j) = -1e30 // tril mask
-          val a = softmaxRows(scores)
+          val a = Layers.softmaxRows(scores)
           sAttns(hh) = a
           sCtx(::, sl) := a * sv(::, sl)
         }
@@ -600,7 +651,7 @@ object TransformerAE {
         val cAttns = new Array[DenseMatrix[Double]](cfg.heads)
         for (hh <- 0 until cfg.heads) {
           val sl = hh * hd until (hh + 1) * hd
-          val a = softmaxRows((cq(::, sl) * ck(::, sl).t) / math.sqrt(hd.toDouble))
+          val a = Layers.softmaxRows((cq(::, sl) * ck(::, sl).t) / math.sqrt(hd.toDouble))
           cAttns(hh) = a
           cCtx(::, sl) := a * cv(::, sl)
         }
@@ -737,11 +788,11 @@ object TransformerAE {
         lay.vec(s"l${l}_ln2_g", p),
         lay.vec(s"l${l}_ln2_g", grad), lay.vec(s"l${l}_ln2_b", grad))
       // res2Pre = res1 + drop(ff2(drop(relu(ff1(res1)))))
-      val dFf = masked(dRes2Pre, encFfMask(l))
+      val dFf = masked(dRes2Pre, masks.layer(l).ff)
       gm("ff2") :+= cch.ffAct.t * dFf
       for (i <- 0 until tE) gb("ff2") :+= dFf(i, ::).t
       val dFfAct = dFf * m("ff2").t
-      val dFfPre = reluBwd(masked(dFfAct, encFfInMask(l)), cch.ffPre)
+      val dFfPre = reluBwd(masked(dFfAct, masks.layer(l).ffIn), cch.ffPre)
       gm("ff1") :+= cch.res1.t * dFfPre
       for (i <- 0 until tE) gb("ff1") :+= dFfPre(i, ::).t
       val dRes1 = dRes2Pre + (dFfPre * m("ff1").t)
@@ -750,7 +801,7 @@ object TransformerAE {
         lay.vec(s"l${l}_ln1_g", p),
         lay.vec(s"l${l}_ln1_g", grad), lay.vec(s"l${l}_ln1_b", grad))
       // res1Pre = x + drop(wo(ctx))
-      val dAttnOut = masked(dRes1Pre, encAttnMask(l))
+      val dAttnOut = masked(dRes1Pre, masks.layer(l).attn)
       gm("wo") :+= cch.ctx.t * dAttnOut
       for (i <- 0 until tE) gb("wo") :+= dAttnOut(i, ::).t
       val dCtx = dAttnOut * m("wo").t
@@ -785,7 +836,7 @@ object TransformerAE {
       dH = dRes1Pre + (dQ * m("wq").t) + (dK * m("wk").t) + (dV * m("wv").t)
     }
     // h0 = drop(srcProj * scale + pos)
-    val dH0 = masked(dH, inMask)
+    val dH0 = masked(dH, masks.in)
     lay.mat("pos", grad) :+= dH0
     dSrcProj :+= dH0 * scale
 
@@ -795,7 +846,7 @@ object TransformerAE {
     val dBSeq = lay.vec("linSeq_b", grad)
     for (i <- 0 until t) dBSeq :+= dSeqProj(i, ::).t
     // x0 was stored dropped; route grads back through the embedding mask
-    val dX0 = masked(dSeqProj * wSeq.t, embMask)
+    val dX0 = masked(dSeqProj * lay.mat("linSeq_w", p).t, masks.emb)
     for (i <- 0 until t) {
       var off = 0
       for (c <- 0 until nCat) {
@@ -817,7 +868,7 @@ object TransformerAE {
       lay.mat("linNonSeq_w", grad) :+= nsx0 * dNs.t
       lay.vec("linNonSeq_b", grad) :+= dNs
       val dNsX0 = wNs * dNs
-      if (nsMask != null) dNsX0 :*= nsMask
+      if (masks.ns != null) dNsX0 :*= masks.ns
       var off = 0
       for (c <- 0 until nNsCat) {
         val tableG = lay.mat(s"nsEmb$c", grad)
@@ -829,8 +880,8 @@ object TransformerAE {
     loss
   }
 
-  /** Inference: flattened encoder output over tEff timesteps (same as
-    * EncoderWeights.forward but over the flat-param model). */
+  /** Inference: flattened encoder output over tEff timesteps, the serving
+    * embedding (caspr/utils/spark/score.py:55-57); dropout never applies. */
   def embed(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
       catCodes: Array[Array[Int]], cont: Array[Array[Double]],
       nsCat: Array[Int] = null, nsCont: Array[Double] = null): Array[Float] =
@@ -841,66 +892,11 @@ object TransformerAE {
   def embedDouble(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
       catCodes: Array[Array[Int]], cont: Array[Array[Double]],
       nsCat: Array[Int] = null, nsCont: Array[Double] = null): Array[Double] = {
-    val t = cfg.seqLen; val tE = cfg.tEff; val d = cfg.dModel
-    val embDims = cfg.embDims
-    val x0 = DenseMatrix.zeros[Double](t, cfg.inDim)
-    for (i <- 0 until t) {
-      var off = 0
-      for (c <- cfg.vocabSizes.indices) {
-        val table = lay.mat(s"emb$c", p)
-        val code = math.min(math.max(catCodes(i)(c), 0), table.rows - 1)
-        x0(i, off until off + embDims(c)) := table(code, ::)
-        off += embDims(c)
-      }
-      for (c <- 0 until cfg.nCont) x0(i, embDims.sum + c) = cont(i)(c)
-    }
-    var h = DenseMatrix.zeros[Double](tE, d)
-    locally {
-      val m = x0 * lay.mat("linSeq_w", p)
-      m(*, ::) :+= lay.vec("linSeq_b", p)
-      h(0 until t, ::) := m
-      if (cfg.hasNonSeq) {
-        val nsEmbDims = cfg.nsEmbDims
-        val v = DenseVector.zeros[Double](cfg.nsInDim)
-        var off = 0
-        for (c <- cfg.nonSeqVocabSizes.indices) {
-          val table = lay.mat(s"nsEmb$c", p)
-          val code = math.min(math.max(if (nsCat != null) nsCat(c) else 0, 0), table.rows - 1)
-          v(off until off + nsEmbDims(c)) := table(code, ::).t
-          off += nsEmbDims(c)
-        }
-        for (c <- 0 until cfg.nNonSeqCont)
-          v(nsEmbDims.sum + c) = if (nsCont != null) nsCont(c) else 0.0
-        h(t, ::) := ((lay.mat("linNonSeq_w", p).t * v) + lay.vec("linNonSeq_b", p)).t
-      }
-    }
-    h :*= math.sqrt(d.toDouble)
-    h += lay.mat("pos", p)
-    for (l <- 0 until cfg.layers) {
-      def m(n: String) = lay.mat(s"l${l}_${n}_w", p)
-      def b(n: String) = lay.vec(s"l${l}_${n}_b", p)
-      val q = h * m("wq"); q(*, ::) :+= b("wq")
-      val k = h * m("wk"); k(*, ::) :+= b("wk")
-      val v = h * m("wv"); v(*, ::) :+= b("wv")
-      val hd = cfg.headDim
-      val ctx = DenseMatrix.zeros[Double](tE, d)
-      for (hh <- 0 until cfg.heads) {
-        val sl = hh * hd until (hh + 1) * hd
-        val a = softmaxRows((q(::, sl) * k(::, sl).t) / math.sqrt(hd.toDouble))
-        ctx(::, sl) := a * v(::, sl)
-      }
-      val attnOut = ctx * m("wo"); attnOut(*, ::) :+= b("wo")
-      val (res1, _, _) = lnFwd(h + attnOut,
-        lay.vec(s"l${l}_ln1_g", p), lay.vec(s"l${l}_ln1_b", p))
-      val ffPre = res1 * m("ff1"); ffPre(*, ::) :+= b("ff1")
-      val ff = relu(ffPre) * m("ff2"); ff(*, ::) :+= b("ff2")
-      val (out, _, _) = lnFwd(res1 + ff,
-        lay.vec(s"l${l}_ln2_g", p), lay.vec(s"l${l}_ln2_b", p))
-      h = out
-    }
-    val out = new Array[Double](tE * d)
+    val enc = encode(cfg, lay, p, catCodes, cont, nsCat, nsCont, null, NoMasks).enc
+    val d = cfg.dModel
+    val out = new Array[Double](enc.rows * d)
     var idx = 0
-    for (i <- 0 until tE; j <- 0 until d) { out(idx) = h(i, j); idx += 1 }
+    for (i <- 0 until enc.rows; j <- 0 until d) { out(idx) = enc(i, j); idx += 1 }
     out
   }
 }

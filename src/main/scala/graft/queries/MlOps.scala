@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.analyze.Segmentation
 import graft.core.{ColumnRoles, Tables}
 import graft.ml.CasprScorer
-import graft.nn.TransformerConfig
-import graft.prep.{CasprFeaturizer, Encoding, FeaturizerConfig}
+import graft.nn.AeConfig
+import graft.prep.{CasprFeaturizer, Encoding, FeaturizerConfig, Normalize}
 import graft.train.{LinearAutoencoder, TrainConfig}
 import Catalog.{HistoryDays, LabelDays, PredTs}
 
@@ -75,26 +75,28 @@ object MlOps extends QueryGroup {
     val wide = model.transform(input)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     lastWide.set(wide)
-    val segEnc = Encoding.fit(wide, "c_mktsegment")
-    // ONE eager aggregate over the cached wide carries the scaler stats
-    // AND the segment cardinality (was: a lazy min/max broadcast + a
-    // separate mapping.count() job); it is also the action that
-    // materializes the cache, so every later consumer reads memory.
-    // c_acctbal is double, so folding min/max in as literals is
-    // bit-identical to the broadcast-column arithmetic it replaces.
-    val mmRow = wide.agg(min("c_acctbal").as("__mn"),
-      max("c_acctbal").as("__mx"),
-      countDistinct(col("c_mktsegment")).as("__card")).head()
-    val (mn, mx) = (mmRow.getDouble(0), mmRow.getDouble(1))
+    // the eager aggregate in profileInputs is also the action that
+    // materializes the cache, so every later consumer reads memory
+    profileInputs(wide, model.cardinality("event_type"), cfg.maxCardinality)
+  }
+
+  /** The scorer's non-seq prep over a featurized wide frame: c_mktsegment
+    * to int codes and c_acctbal min-max scaled, both under the featurizer's
+    * own policies — one [[Normalize.fitWithCardinalities]] aggregate, a
+    * constant or all-null column passes through unscaled
+    * (spark/preprocess.py:178-180), and the segment vocab is capped at
+    * `maxCardinality` like the encoding that produces the codes. Returns
+    * (prepped wide, vocab sizes incl. the UNK row). */
+  private[graft] def profileInputs(wide: DataFrame, eventTypeCard: Long,
+      maxCardinality: Int): (DataFrame, Map[String, Long]) = {
+    val segEnc = Encoding.fit(wide, "c_mktsegment", maxCardinality)
+    val (summary, cards) =
+      Normalize.fitWithCardinalities(wide, Seq("c_acctbal"), Seq("c_mktsegment"))
     val wideEnc = Encoding.apply(wide, segEnc)
-      // constant-column guard (mirrors NormalizationSummary.minMaxOf):
-      // max==min would divide to NaN and read as a silent 0-fill downstream
-      .withColumn("c_acctbal",
-        if (mx == mn) lit(0.0)
-        else (col("c_acctbal") - lit(mn)) / lit(mx - mn))
+      .withColumn("c_acctbal", summary.minMax("c_acctbal"))
     val vocab = Map(
-      "event_type" -> (model.cardinality("event_type") + 1),
-      "c_mktsegment" -> (mmRow.getLong(2) + 1))
+      "event_type" -> (eventTypeCard + 1),
+      "c_mktsegment" -> (math.min(cards("c_mktsegment"), maxCardinality.toLong) + 1))
     (wideEnc, vocab)
   }
 
@@ -120,8 +122,10 @@ object MlOps extends QueryGroup {
       (s, dir) => {
         val (wideEnc, vocab) = profileFeaturized(s, dir)
         embedScalars(
-          CasprScorer.forWide(TransformerConfig(dModel = 16, heads = 2, layers = 2, pf = 8),
-              "user_id", vocab, seqLen,
+          CasprScorer.forWide(AeConfig(dModel = 16, heads = 2, layers = 2, pf = 8,
+                seqLen = seqLen, vocabSizes = Seq(vocab("event_type").toInt), nCont = 2,
+                nonSeqVocabSizes = Seq(vocab("c_mktsegment").toInt), nNonSeqCont = 1),
+              "user_id",
               seqCat = Seq("event_type"), seqCont = Seq("value", "ts_days"),
               nonSeqCat = Seq("c_mktsegment"), nonSeqCont = Seq("c_acctbal"))
             .transform(wideEnc))
@@ -314,13 +318,11 @@ object MlOps extends QueryGroup {
           seqLen = seqLen, vocabSizes = Seq(vocab), nCont = 2)
         val seqCat = Seq((1 to seqLen).map(t => s"event_type_$t"))
         val seqCont = Seq("value", "ts_days").map(c => (1 to seqLen).map(t => s"${c}_$t"))
-        val baseRows = graft.ml.Ingress.project(wide, "user_id", seqCat, seqCont)
-          .orderBy(col("user_id")).limit(4).collect()
-        val bCat = baseRows.map(r => graft.ml.Ingress.seqCatOf(r, seqLen, 1))
-        val bCont = baseRows.map(r => graft.ml.Ingress.seqContOf(r, seqLen, 1, 2))
+        val base = graft.ml.Ingress.smallestIds(wide, "user_id",
+          graft.ml.InputColumns(seqCat, seqCont), 4)
         val attrs = graft.analyze.Explainer.deepLift(wide, cfg,
-          cfg.initParams(), "user_id", seqCat, seqCont,
-          targetDim = 0, baselineCat = bCat, baselineCont = bCont)
+          cfg.initParams(), "user_id", seqCat, seqCont, targetDim = 0,
+          baselineCat = base.map(_.seqCat), baselineCont = base.map(_.seqCont))
         attrs.columns.filter(_.startsWith("attr_"))
           .foldLeft(attrs)((d, c) => d.withColumn(c, round(col(c), 6)))
       },

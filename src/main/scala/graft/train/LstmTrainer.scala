@@ -1,7 +1,8 @@
 package graft.train
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{DoubleType, StructField}
+import graft.ml.{EntityInputs, Ingress, InputColumns}
 import graft.nn.{LstmAE, LstmAeConfig}
 
 /**
@@ -22,33 +23,7 @@ object LstmTrainer {
   final case class Result(cfg: LstmAeConfig, params: Array[Double],
       losses: Seq[Double], stoppedAt: Int)
 
-  /** (seq cat, seq cont, ns cat, ns cont, label) per entity. */
-  private type Example =
-    (Array[Array[Int]], Array[Array[Double]], Array[Int], Array[Double], Double)
-
-  private def examples(wide: DataFrame, seqCatCols: Seq[Seq[String]],
-      seqContCols: Seq[Seq[String]], nsCatCols: Seq[String],
-      nsContCols: Seq[String], labelCol: Option[String]) = {
-    val t = seqCatCols.headOption.map(_.size)
-      .orElse(seqContCols.headOption.map(_.size)).getOrElse(0)
-    val nCat = seqCatCols.size; val nCont = seqContCols.size
-    val nNsCat = nsCatCols.size
-    // the label rides the projection as one extra ns-cont double
-    val nsContAll = nsContCols ++ labelCol.toSeq
-    val nAll = nsContAll.size
-    val hasLabel = labelCol.isDefined
-    graft.ml.Ingress.project(wide, wide.columns.head, seqCatCols, seqContCols,
-        nsCatCols, nsContAll)
-      .rdd.map { row =>
-        val nsAll = graft.ml.Ingress.nsContOf(row, t, nCat, nCont, nNsCat, nAll)
-        val (nsCont, label) =
-          if (hasLabel) (nsAll.dropRight(1), nsAll.last) else (nsAll, 0.0)
-        (graft.ml.Ingress.seqCatOf(row, t, nCat),
-         graft.ml.Ingress.seqContOf(row, t, nCat, nCont),
-         graft.ml.Ingress.nsCatOf(row, t, nCat, nCont, nNsCat),
-         nsCont, label): Example
-      }
-  }
+  private type Example = (EntityInputs, Double)
 
   def fit(wide: DataFrame, cfg: LstmAeConfig,
       seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
@@ -62,8 +37,8 @@ object LstmTrainer {
     require(!cfg.hasChurn || labelCol.nonEmpty,
       "decoder = \"churn\" trains BCE against labelCol — pass one")
     val lay = cfg.layout
-    val data = examples(wide, seqCatCols, seqContCols,
-        nonSeqCatCols, nonSeqContCols, labelCol)
+    val data = Ingress.examples(wide,
+        InputColumns(seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols), labelCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val params = cfg.initParams()
     // per-example dropout seed (see TransformerTrainer.fit); probe
@@ -72,18 +47,19 @@ object LstmTrainer {
       var calls = 0L
       (p: Array[Double], a: Array[Double], ex: Example) => {
         calls += 1
+        val (e, label) = ex
         val ds = train.seed ^ (calls * 0x9E3779B97F4A7C15L) ^
-          java.util.Arrays.deepHashCode(ex._1.asInstanceOf[Array[AnyRef]])
-        LstmAE.lossGradEmbed(cfg, lay, p, a, ex._1, ex._2, ex._3, ex._4, ex._5,
-          dropSeed = ds)._1
+          java.util.Arrays.deepHashCode(e.seqCat.asInstanceOf[Array[AnyRef]])
+        LstmAE.lossGradEmbed(cfg, lay, p, a, e.seqCat, e.seqCont, e.nsCat, e.nsCont,
+          label, dropSeed = ds)._1
       }
     }
     val cfgEval = cfg.copy(dropout = 0.0)
     val res = EpochLoop.run(data, params, train, batchSize, examplesPerEpoch,
       lossGradFn,
       lossOnly = Some((p: Array[Double], ex: Example) =>
-        LstmAE.lossGradEmbed(cfgEval, lay, p, null, ex._1, ex._2, ex._3, ex._4,
-          ex._5)._1),
+        LstmAE.lossGradEmbed(cfgEval, lay, p, null, ex._1.seqCat, ex._1.seqCont,
+          ex._1.nsCat, ex._1.nsCont, ex._2)._1),
       frozenRanges = cfg.frozenRanges)
     data.unpersist()
     Result(cfg, params, res.losses, res.stoppedAt)
@@ -94,28 +70,16 @@ object LstmTrainer {
       seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
       nonSeqCatCols: Seq[String] = Nil,
       nonSeqContCols: Seq[String] = Nil): DataFrame = {
-    val spark = wide.sparkSession
-    val lay = res.cfg.layout
-    val bc = spark.sparkContext.broadcast(res.params)
-    val t = res.cfg.seqLen
-    val nCat = seqCatCols.size; val nCont = seqContCols.size
-    val nNsCat = nonSeqCatCols.size; val nNsCont = nonSeqContCols.size
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols,
-      nonSeqCatCols, nonSeqContCols)
-    val outSchema = StructType(Seq(proj.schema(0),
-      StructField("embedding", ArrayType(FloatType, containsNull = false))))
-    proj.mapPartitions { rows =>
+    val cfg = res.cfg
+    val lay = cfg.layout
+    val bc = wide.sparkSession.sparkContext.broadcast(res.params)
+    Ingress.score(wide, idCol,
+      InputColumns(seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols),
+      Ingress.EmbeddingField) { () =>
       val p = bc.value
-      rows.map { row =>
-        val (_, emb) = LstmAE.lossGradEmbed(res.cfg, lay, p, null,
-          graft.ml.Ingress.seqCatOf(row, t, nCat),
-          graft.ml.Ingress.seqContOf(row, t, nCat, nCont),
-          graft.ml.Ingress.nsCatOf(row, t, nCat, nCont, nNsCat),
-          graft.ml.Ingress.nsContOf(row, t, nCat, nCont, nNsCat, nNsCont),
-          embedOnly = true)
-        Row(row.get(0), emb.map(_.toFloat))
-      }
-    }(Encoders.row(outSchema))
+      e => LstmAE.lossGradEmbed(cfg, lay, p, null, e.seqCat, e.seqCont,
+        e.nsCat, e.nsCont, embedOnly = true)._2.map(_.toFloat)
+    }
   }
 
   /** I16 churn scoring: sigmoid(head) probability from a churn-trained
@@ -125,33 +89,23 @@ object LstmTrainer {
       nonSeqCatCols: Seq[String] = Nil,
       nonSeqContCols: Seq[String] = Nil): DataFrame = {
     require(res.cfg.hasChurn, "transformChurn needs a churn-trained Result")
-    val spark = wide.sparkSession
-    val lay = res.cfg.layout
-    val bc = spark.sparkContext.broadcast(res.params)
-    val t = res.cfg.seqLen
-    val nCat = seqCatCols.size; val nCont = seqContCols.size
-    val nNsCat = nonSeqCatCols.size; val nNsCont = nonSeqContCols.size
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols,
-      nonSeqCatCols, nonSeqContCols)
-    val outSchema = StructType(Seq(proj.schema(0),
-      StructField("churn_prob", DoubleType, nullable = false)))
-    proj.mapPartitions { rows =>
+    val cfg = res.cfg
+    val lay = cfg.layout
+    val bc = wide.sparkSession.sparkContext.broadcast(res.params)
+    Ingress.score(wide, idCol,
+      InputColumns(seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols),
+      StructField("churn_prob", DoubleType, nullable = false)) { () =>
       val p = bc.value
       val (wOff, _) = lay.offsets("churn_w")
       val (bOff, _) = lay.offsets("churn_b")
-      val outDim = res.cfg.outDim
-      rows.map { row =>
-        val (_, emb) = LstmAE.lossGradEmbed(res.cfg, lay, p, null,
-          graft.ml.Ingress.seqCatOf(row, t, nCat),
-          graft.ml.Ingress.seqContOf(row, t, nCat, nCont),
-          graft.ml.Ingress.nsCatOf(row, t, nCat, nCont, nNsCat),
-          graft.ml.Ingress.nsContOf(row, t, nCat, nCont, nNsCat, nNsCont),
-          embedOnly = true)
+      e => {
+        val (_, emb) = LstmAE.lossGradEmbed(cfg, lay, p, null, e.seqCat, e.seqCont,
+          e.nsCat, e.nsCont, embedOnly = true)
         var z = p(bOff)
         var i = 0
-        while (i < outDim) { z += p(wOff + i) * emb(i); i += 1 }
-        Row(row.get(0), 1.0 / (1.0 + math.exp(-z)))
+        while (i < cfg.outDim) { z += p(wOff + i) * emb(i); i += 1 }
+        1.0 / (1.0 + math.exp(-z))
       }
-    }(Encoders.row(outSchema))
+    }
   }
 }

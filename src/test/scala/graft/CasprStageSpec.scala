@@ -102,9 +102,9 @@ class CasprStageSpec extends SparkSpec {
       tiebreak = Seq("event_id"))
     val vocab = Map("event_type" -> 8L)
     val tStage = new graft.ml.CasprScorerStage(graft.ml.CasprScorer.forWide(
-      graft.nn.TransformerConfig(dModel = 8, heads = 2, layers = 1, pf = 8),
-      "user_id", vocab, seqLen = 4,
-      seqCat = Seq("event_type"), seqCont = Seq("value", "ts_days")))
+      graft.nn.AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8, seqLen = 4,
+        vocabSizes = Seq(vocab("event_type").toInt), nCont = 2),
+      "user_id", seqCat = Seq("event_type"), seqCont = Seq("value", "ts_days")))
     val lStage = new graft.ml.LstmScorerStage(graft.ml.LstmScorerModel(
       graft.nn.LstmEncoderWeights.init(hidden = 8, outDim = 6,
         vocabSizes = Seq(8), nCont = 2),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.analyze.{Capacity, Hungarian}
-import graft.nn.{EncoderWeights, TransformerConfig}
+import graft.nn.AeConfig
 import graft.prep.Sampling
 import graft.sources.Handover
 
@@ -76,20 +76,17 @@ class MiscSpec extends SparkSpec {
   }
 
   test("J11 capacity formulas match the actual initialized weight counts") {
-    val cfg = TransformerConfig(dModel = 8, heads = 2, layers = 2, pf = 4, maxLen = 10)
     val vocabs = Seq(5L, 11L)
-    val w = EncoderWeights.init(cfg, vocabs, nCont = 3)
-    val actual =
-      w.catEmbeddings.map(m => m.rows.toLong * m.cols).sum +
-      w.linearSeq.w.size.toLong + w.linearSeq.b.size +
-      w.posEmbedding.size.toLong +
-      w.layersW.map { l =>
-        Seq(l.wq, l.wk, l.wv, l.wo, l.ff1, l.ff2)
-          .map(x => x.w.size.toLong + x.b.size).sum +
-          l.ln1g.size + l.ln1b.size + l.ln2g.size + l.ln2b.size
-      }.sum
+    val cfg = AeConfig(dModel = 8, heads = 2, layers = 2, pf = 4, seqLen = 10,
+      vocabSizes = vocabs.map(_.toInt), nCont = 3)
+    // the encoder's blocks: embedding tables, linear_seq, pos, encoder layers
+    val encoder = cfg.layout.specs.filter(s =>
+      s.name.matches("emb\\d+|linSeq_[wb]|pos|l\\d+_.*"))
+    val p = cfg.initParams()
+    assert(p.length == cfg.layout.totalSize)
+    val actual = encoder.map(_.size.toLong).sum
     val formula = Capacity.transformerEncoderParams(vocabs, nCont = 3,
-      d = 8, layers = 2, pf = 4, maxLen = 10)
+      d = 8, layers = 2, pf = 4, maxLen = cfg.tEff)
     assert(actual == formula, s"actual=$actual formula=$formula")
   }
 

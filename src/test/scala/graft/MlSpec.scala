@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.nn.{Dims, EncoderWeights, TransformerConfig}
+import graft.nn.Dims
 import graft.train.{LinearAutoencoder, TrainConfig}
 
 /** Model-side specs: encoder numerics, training convergence, scoring shape. */
@@ -14,19 +14,23 @@ class MlSpec extends SparkSpec {
     assert(Dims.embeddingDim(100000) == 25)
   }
 
-  test("encoder forward: deterministic, finite, right shape") {
-    val cfg = TransformerConfig(dModel = 8, heads = 2, layers = 2, pf = 4, maxLen = 10)
-    val w = EncoderWeights.init(cfg, vocabSizes = Seq(5), nCont = 2)
-    val cat = Array(Array(1), Array(2), Array(0))
-    val cont = Array(Array(0.5, 0.1), Array(0.2, 0.9), Array(0.0, 0.0))
-    val e1 = w.forward(cat, cont)
-    val e2 = w.forward(cat, cont)
-    assert(e1.length == 3 * 8)
-    assert(e1.sameElements(e2))
-    assert(e1.forall(v => !v.isNaN && !v.isInfinite))
-    // different input -> different embedding
-    val e3 = w.forward(Array(Array(3), Array(2), Array(0)), cont)
-    assert(!e1.sameElements(e3))
+  test("profile prep: all-null c_acctbal passes through, segment vocab capped at 30000") {
+    import graft.queries.MlOps
+    val allNull = Seq((1L, "A"), (2L, "B"), (3L, "A"))
+      .toDF("user_id", "c_mktsegment")
+      .withColumn("c_acctbal", lit(null).cast("double"))
+    val (enc, vocab) = MlOps.profileInputs(allNull, eventTypeCard = 4, maxCardinality = 30000)
+    assert(vocab == Map("event_type" -> 5L, "c_mktsegment" -> 3L))
+    assert(enc.select("c_acctbal").collect().forall(_.isNullAt(0)))
+    // more distinct segments than the encoding keeps: vocab = cap + UNK row
+    val wide = spark.range(30005).select(col("id").as("user_id"),
+      concat(lit("s"), col("id").cast("string")).as("c_mktsegment"),
+      (col("id") % 7).cast("double").as("c_acctbal"))
+    val (enc2, vocab2) = MlOps.profileInputs(wide, eventTypeCard = 4, maxCardinality = 30000)
+    assert(vocab2("c_mktsegment") == 30001L)
+    val codes = enc2.agg(max("c_mktsegment"), min("c_acctbal"), max("c_acctbal")).head()
+    assert(codes.getInt(0) < vocab2("c_mktsegment"))
+    assert(codes.getDouble(1) == 0.0 && codes.getDouble(2) == 1.0)
   }
 
   test("linear AE training: loss strictly decreases on overfit-able data") {

@@ -842,9 +842,9 @@ class StreamingSpec extends SparkSpec {
     val model = CasprFeaturizer.fit(input, cfg)
     val vocab = (model.encodings("event_type").mapping.count() + 1)
     val scorer = graft.ml.CasprScorer.forWide(
-      graft.nn.TransformerConfig(dModel = 8, heads = 2, layers = 1, pf = 8),
-      "user_id", Map("event_type" -> vocab), 5,
-      seqCat = Seq("event_type"), seqCont = Seq("value", "ts_days"))
+      graft.nn.AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8, seqLen = 5,
+        vocabSizes = Seq(vocab.toInt), nCont = 2),
+      "user_id", seqCat = Seq("event_type"), seqCont = Seq("value", "ts_days"))
     // the scorer is a projection + mapPartitions with broadcast weights, so
     // the SAME model object transforms the batch wide frame and the
     // streaming featurized frame — end-to-end streaming inference
