@@ -21,8 +21,8 @@ import graft.train.{TrainConfig, TransformerTrainer}
  *   new LogisticRegression()))                     // any downstream head
  * }}}
  *
- * `fit` runs [[graft.train.TransformerTrainer.fit]] (broadcast weights +
- * treeAggregate grads — the J1/J2/J5 loop); the fitted [[CasprModel]]
+ * `fit` runs [[graft.train.TransformerTrainer.fit]] (the [[graft.train.EpochLoop]]
+ * J1/J2/J5 loop); the fitted [[CasprModel]]
  * scores through [[CasprScorerModel]] — the same harness and encoder
  * forward as the seeded scorer and the standalone trainer — appending
  * `embedding: array<float>`. Column lists derive from the base feature

@@ -1,6 +1,6 @@
 package graft.nn
 
-import breeze.linalg.{*, DenseMatrix, DenseVector, max, sum}
+import breeze.linalg.{DenseMatrix, DenseVector, max, sum}
 import breeze.numerics.exp
 
 /**
@@ -32,7 +32,7 @@ import breeze.numerics.exp
  *
  * All parameters live in ONE flat Array[Double]; matrices are zero-copy
  * Breeze views into it. Gradients accumulate into a same-layout flat array,
- * which makes the Spark treeAggregate harness (graft.train) trivial.
+ * which makes the Spark gradient sum (graft.train.EpochLoop) trivial.
  */
 final case class ParamSpec(name: String, rows: Int, cols: Int) { def size: Int = rows * cols }
 
@@ -219,59 +219,18 @@ final case class AeConfig(
  * One encoder forward ([[encode]]) serves training ([[lossAndGrad]]),
  * scoring with trained weights, and the seeded scorer
  * (graft.ml.CasprScorer, weights from [[AeConfig.initParams]]).
+ *
+ * Matrix products go through Breeze (BLAS). The row-wise work — bias adds,
+ * bias-gradient column sums, ReLU, softmax and its backward, LayerNorm
+ * forward and backward — runs in the primitive [[Layers]] kernels, which
+ * keep the Breeze formulations' arithmetic order (bit-identical results)
+ * without their per-row views and generic dispatch.
  */
 object TransformerAE {
+  import Layers.{addBias, addColSums, layerNormBwd, layerNormFwd, relu, reluBwd,
+    softmaxBwd, softmaxRows}
 
   private val LnEps = 1e-5
-
-  /** ReLU forward (transformer.py:158). */
-  private def relu(m: DenseMatrix[Double]): DenseMatrix[Double] =
-    m.map(v => if (v > 0) v else 0.0)
-
-  /** ReLU backward: dPre = dAct where pre > 0 (subgradient 0 at 0). */
-  private def reluBwd(dAct: DenseMatrix[Double], act: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val out = dAct.copy
-    for (i <- 0 until out.rows; j <- 0 until out.cols)
-      if (act(i, j) <= 0) out(i, j) = 0.0
-    out
-  }
-
-  /** LayerNorm forward returning (out, xhat, invstd) caches. */
-  private def lnFwd(x: DenseMatrix[Double], g: DenseVector[Double], b: DenseVector[Double])
-      : (DenseMatrix[Double], DenseMatrix[Double], Array[Double]) = {
-    val out = DenseMatrix.zeros[Double](x.rows, x.cols)
-    val xhat = DenseMatrix.zeros[Double](x.rows, x.cols)
-    val inv = new Array[Double](x.rows)
-    for (i <- 0 until x.rows) {
-      val row = x(i, ::).t
-      val mu = sum(row) / row.length
-      val c = row - mu
-      val istd = 1.0 / math.sqrt(sum(c *:* c) / row.length + LnEps)
-      inv(i) = istd
-      xhat(i, ::) := (c * istd).t
-      out(i, ::) := ((c * istd) *:* g + b).t
-    }
-    (out, xhat, inv)
-  }
-
-  /** LayerNorm backward: returns dX; accumulates dG, dB. */
-  private def lnBwd(dOut: DenseMatrix[Double], xhat: DenseMatrix[Double],
-      inv: Array[Double], g: DenseVector[Double],
-      dG: DenseVector[Double], dB: DenseVector[Double]): DenseMatrix[Double] = {
-    val n = xhat.cols.toDouble
-    val dX = DenseMatrix.zeros[Double](xhat.rows, xhat.cols)
-    for (i <- 0 until xhat.rows) {
-      val dy = dOut(i, ::).t
-      val xh = xhat(i, ::).t
-      dG :+= dy *:* xh
-      dB :+= dy
-      val dxhat = dy *:* g
-      val s1 = sum(dxhat)
-      val s2 = sum(dxhat *:* xh)
-      dX(i, ::) := ((dxhat - (xh * (s2 / n)) - (s1 / n)) * inv(i)).t
-    }
-    dX
-  }
 
   private def masked(m: DenseMatrix[Double], mask: DenseMatrix[Double]): DenseMatrix[Double] =
     if (mask == null) m else m *:* mask
@@ -369,7 +328,7 @@ object TransformerAE {
     val srcProj = DenseMatrix.zeros[Double](tE, d)
     locally {
       val m = x0 * lay.mat("linSeq_w", p)
-      m(*, ::) :+= lay.vec("linSeq_b", p)
+      addBias(m, lay.vec("linSeq_b", p))
       srcProj(0 until t, ::) := m
       if (cfg.hasNonSeq) {
         val wNs = lay.mat("linNonSeq_w", p); val bNs = lay.vec("linNonSeq_b", p)
@@ -389,30 +348,30 @@ object TransformerAE {
       def m(n: String) = lay.mat(s"l${l}_${n}_w", p)
       def b(n: String) = lay.vec(s"l${l}_${n}_b", p)
       val lm = masks.layer(l)
-      val q = h * m("wq"); q(*, ::) :+= b("wq")
-      val k = h * m("wk"); k(*, ::) :+= b("wk")
-      val v = h * m("wv"); v(*, ::) :+= b("wv")
+      val q = h * m("wq"); addBias(q, b("wq"))
+      val k = h * m("wk"); addBias(k, b("wk"))
+      val v = h * m("wv"); addBias(v, b("wv"))
       val ctx = DenseMatrix.zeros[Double](tE, d)
       val attns = new Array[DenseMatrix[Double]](cfg.heads)
       for (hh <- 0 until cfg.heads) {
         val sl = hh * hd until (hh + 1) * hd
-        val a = Layers.softmaxRows((q(::, sl) * k(::, sl).t) / math.sqrt(hd.toDouble))
+        val a = softmaxRows((q(::, sl) * k(::, sl).t) / math.sqrt(hd.toDouble))
         attns(hh) = a
         ctx(::, sl) := a * v(::, sl)
       }
-      val attnOut = ctx * m("wo"); attnOut(*, ::) :+= b("wo")
+      val attnOut = ctx * m("wo"); addBias(attnOut, b("wo"))
       // src = ln(src + dropout(attn)) (transformer.py:46-47)
       val res1Pre = h + masked(attnOut, lm.attn)
       val (res1, ln1Xhat, ln1Inv) =
-        lnFwd(res1Pre, lay.vec(s"l${l}_ln1_g", p), lay.vec(s"l${l}_ln1_b", p))
-      val ffPre = res1 * m("ff1"); ffPre(*, ::) :+= b("ff1")
+        layerNormFwd(res1Pre, lay.vec(s"l${l}_ln1_g", p), lay.vec(s"l${l}_ln1_b", p), LnEps)
+      val ffPre = res1 * m("ff1"); addBias(ffPre, b("ff1"))
       // x = dropout(relu(fc1(x))) (transformer.py:158); cached DROPPED
       val ffAct = masked(relu(ffPre), lm.ffIn)
-      val ff = ffAct * m("ff2"); ff(*, ::) :+= b("ff2")
+      val ff = ffAct * m("ff2"); addBias(ff, b("ff2"))
       // src = ln(src + dropout(ff)) (transformer.py:54-55)
       val res2Pre = res1 + masked(ff, lm.ff)
       val (out, ln2Xhat, ln2Inv) =
-        lnFwd(res2Pre, lay.vec(s"l${l}_ln2_g", p), lay.vec(s"l${l}_ln2_b", p))
+        layerNormFwd(res2Pre, lay.vec(s"l${l}_ln2_g", p), lay.vec(s"l${l}_ln2_b", p), LnEps)
       caches(l) = LayerCache(h, q, k, v, attns, ctx, res1Pre, res1, ln1Xhat,
         ln1Inv, ffPre, ffAct, res2Pre, ln2Xhat, ln2Inv, out)
       h = out
@@ -497,8 +456,8 @@ object TransformerAE {
       val xSeq = x(0 until t, ::)
       for (c <- 0 until nCat) {
         val w = lay.mat(s"headCat${c}_w", p); val b = lay.vec(s"headCat${c}_b", p)
-        val logits = xSeq * w; logits(*, ::) :+= b
-        val probs = Layers.softmaxRows(logits)
+        val logits = xSeq * w; addBias(logits, b)
+        val probs = softmaxRows(logits)
         val dLogits = probs.copy
         for (i <- 0 until t) {
           val y = math.min(math.max(catCodes(i)(c), 0), w.cols - 1)
@@ -509,21 +468,21 @@ object TransformerAE {
         if (doGrad) {
           lay.mat(s"headCat${c}_w", grad) :+= xSeq.t * dLogits
           val dB = lay.vec(s"headCat${c}_b", grad)
-          for (i <- 0 until t) dB :+= dLogits(i, ::).t
+          addColSums(dB, dLogits)
           dX(0 until t, ::) :+= dLogits * w.t
         }
       }
       hl = hl / t
       if (cfg.nCont > 0) {
         val w = lay.mat("headCont_w", p); val b = lay.vec("headCont_b", p)
-        val pred = xSeq * w; pred(*, ::) :+= b
+        val pred = xSeq * w; addBias(pred, b)
         val err = DenseMatrix.tabulate(t, cfg.nCont)((i, j) => pred(i, j) - cont(i)(j))
         hl += sum(err *:* err) / (2.0 * t)
         if (doGrad) {
           val dPred = err / t.toDouble
           lay.mat("headCont_w", grad) :+= xSeq.t * dPred
           val dB = lay.vec("headCont_b", grad)
-          for (i <- 0 until t) dB :+= dPred(i, ::).t
+          addColSums(dB, dPred)
           dX(0 until t, ::) :+= dPred * w.t
         }
       }
@@ -625,49 +584,49 @@ object TransformerAE {
         def m(n: String) = lay.mat(s"d${l}_${n}_w", p)
         def b(n: String) = lay.vec(s"d${l}_${n}_b", p)
         // causal self-attention
-        val sq = g * m("swq"); sq(*, ::) :+= b("swq")
-        val sk = g * m("swk"); sk(*, ::) :+= b("swk")
-        val sv = g * m("swv"); sv(*, ::) :+= b("swv")
+        val sq = g * m("swq"); addBias(sq, b("swq"))
+        val sk = g * m("swk"); addBias(sk, b("swk"))
+        val sv = g * m("swv"); addBias(sv, b("swv"))
         val sCtx = DenseMatrix.zeros[Double](tE, d)
         val sAttns = new Array[DenseMatrix[Double]](cfg.heads)
         for (hh <- 0 until cfg.heads) {
           val sl = hh * hd until (hh + 1) * hd
           val scores = (sq(::, sl) * sk(::, sl).t) / math.sqrt(hd.toDouble)
           for (i <- 0 until tE; j <- i + 1 until tE) scores(i, j) = -1e30 // tril mask
-          val a = Layers.softmaxRows(scores)
+          val a = softmaxRows(scores)
           sAttns(hh) = a
           sCtx(::, sl) := a * sv(::, sl)
         }
-        val sOut = sCtx * m("swo"); sOut(*, ::) :+= b("swo")
+        val sOut = sCtx * m("swo"); addBias(sOut, b("swo"))
         decSelfMask(l) = dropMask(tE, d)
         val r1Pre = g + masked(sOut, decSelfMask(l))
         val (r1, ln1Xhat, ln1Inv) =
-          lnFwd(r1Pre, lay.vec(s"d${l}_ln1_g", p), lay.vec(s"d${l}_ln1_b", p))
+          layerNormFwd(r1Pre, lay.vec(s"d${l}_ln1_g", p), lay.vec(s"d${l}_ln1_b", p), LnEps)
         // cross-attention to the encoder output
-        val cq = r1 * m("cwq"); cq(*, ::) :+= b("cwq")
-        val ck = enc * m("cwk"); ck(*, ::) :+= b("cwk")
-        val cv = enc * m("cwv"); cv(*, ::) :+= b("cwv")
+        val cq = r1 * m("cwq"); addBias(cq, b("cwq"))
+        val ck = enc * m("cwk"); addBias(ck, b("cwk"))
+        val cv = enc * m("cwv"); addBias(cv, b("cwv"))
         val cCtx = DenseMatrix.zeros[Double](tE, d)
         val cAttns = new Array[DenseMatrix[Double]](cfg.heads)
         for (hh <- 0 until cfg.heads) {
           val sl = hh * hd until (hh + 1) * hd
-          val a = Layers.softmaxRows((cq(::, sl) * ck(::, sl).t) / math.sqrt(hd.toDouble))
+          val a = softmaxRows((cq(::, sl) * ck(::, sl).t) / math.sqrt(hd.toDouble))
           cAttns(hh) = a
           cCtx(::, sl) := a * cv(::, sl)
         }
-        val cOut = cCtx * m("cwo"); cOut(*, ::) :+= b("cwo")
+        val cOut = cCtx * m("cwo"); addBias(cOut, b("cwo"))
         decCrossMask(l) = dropMask(tE, d)
         val r2Pre = r1 + masked(cOut, decCrossMask(l))
         val (r2, ln2Xhat, ln2Inv) =
-          lnFwd(r2Pre, lay.vec(s"d${l}_ln2_g", p), lay.vec(s"d${l}_ln2_b", p))
-        val ffPre = r2 * m("ff1"); ffPre(*, ::) :+= b("ff1")
+          layerNormFwd(r2Pre, lay.vec(s"d${l}_ln2_g", p), lay.vec(s"d${l}_ln2_b", p), LnEps)
+        val ffPre = r2 * m("ff1"); addBias(ffPre, b("ff1"))
         decFfInMask(l) = dropMask(tE, cfg.pf)
         val ffAct = masked(relu(ffPre), decFfInMask(l)) // cached DROPPED
-        val ff = ffAct * m("ff2"); ff(*, ::) :+= b("ff2")
+        val ff = ffAct * m("ff2"); addBias(ff, b("ff2"))
         decFfMask(l) = dropMask(tE, d)
         val r3Pre = r2 + masked(ff, decFfMask(l))
         val (out, ln3Xhat, ln3Inv) =
-          lnFwd(r3Pre, lay.vec(s"d${l}_ln3_g", p), lay.vec(s"d${l}_ln3_b", p))
+          layerNormFwd(r3Pre, lay.vec(s"d${l}_ln3_g", p), lay.vec(s"d${l}_ln3_b", p), LnEps)
         dcaches(l) = DecCache(g, sq, sk, sv, sAttns, sCtx, r1Pre, r1, ln1Xhat,
           ln1Inv, cq, ck, cv, cAttns, cCtx, r2Pre, r2, ln2Xhat, ln2Inv,
           ffPre, ffAct, r3Pre, ln3Xhat, ln3Inv)
@@ -683,24 +642,24 @@ object TransformerAE {
         def m(n: String) = lay.mat(s"d${l}_${n}_w", p)
         def gm(n: String) = lay.mat(s"d${l}_${n}_w", grad)
         def gb(n: String) = lay.vec(s"d${l}_${n}_b", grad)
-        val dR3Pre = lnBwd(dG, cch.ln3Xhat, cch.ln3Inv,
+        val dR3Pre = layerNormBwd(dG, cch.ln3Xhat, cch.ln3Inv,
           lay.vec(s"d${l}_ln3_g", p),
           lay.vec(s"d${l}_ln3_g", grad), lay.vec(s"d${l}_ln3_b", grad))
         val dFf = masked(dR3Pre, decFfMask(l))
         gm("ff2") :+= cch.ffAct.t * dFf
-        for (i <- 0 until tE) gb("ff2") :+= dFf(i, ::).t
+        addColSums(gb("ff2"), dFf)
         val dFfAct = dFf * m("ff2").t
         val dFfPre = reluBwd(masked(dFfAct, decFfInMask(l)), cch.ffPre)
         gm("ff1") :+= cch.r2.t * dFfPre
-        for (i <- 0 until tE) gb("ff1") :+= dFfPre(i, ::).t
+        addColSums(gb("ff1"), dFfPre)
         val dR2 = dR3Pre + (dFfPre * m("ff1").t)
-        val dR2Pre = lnBwd(dR2, cch.ln2Xhat, cch.ln2Inv,
+        val dR2Pre = layerNormBwd(dR2, cch.ln2Xhat, cch.ln2Inv,
           lay.vec(s"d${l}_ln2_g", p),
           lay.vec(s"d${l}_ln2_g", grad), lay.vec(s"d${l}_ln2_b", grad))
         // cross-attn backward: r2Pre = r1 + drop(cwo(cCtx))
         val dCOut = masked(dR2Pre, decCrossMask(l))
         gm("cwo") :+= cch.cCtx.t * dCOut
-        for (i <- 0 until tE) gb("cwo") :+= dCOut(i, ::).t
+        addColSums(gb("cwo"), dCOut)
         val dCCtx = dCOut * m("cwo").t
         val dCq = DenseMatrix.zeros[Double](tE, d)
         val dCk = DenseMatrix.zeros[Double](tE, d)
@@ -711,33 +670,24 @@ object TransformerAE {
           val dCtxH = dCCtx(::, sl)
           val dA = dCtxH * cch.cv(::, sl).t
           dCv(::, sl) :+= a.t * dCtxH
-          val dScores = DenseMatrix.zeros[Double](tE, tE)
-          for (i <- 0 until tE) {
-            val ai = a(i, ::).t
-            val dai = dA(i, ::).t
-            val dot = sum(ai *:* dai)
-            dScores(i, ::) := ((dai - dot) *:* ai).t
-          }
-          dScores :/= math.sqrt(hd.toDouble)
+          val dScores = softmaxBwd(a, dA, math.sqrt(hd.toDouble))
           dCq(::, sl) :+= dScores * cch.ck(::, sl)
           dCk(::, sl) :+= dScores.t * cch.cq(::, sl)
         }
         gm("cwq") :+= cch.r1.t * dCq
         gm("cwk") :+= enc.t * dCk
         gm("cwv") :+= enc.t * dCv
-        for (i <- 0 until tE) {
-          gb("cwq") :+= dCq(i, ::).t; gb("cwk") :+= dCk(i, ::).t
-          gb("cwv") :+= dCv(i, ::).t
-        }
+        addColSums(gb("cwq"), dCq); addColSums(gb("cwk"), dCk)
+        addColSums(gb("cwv"), dCv)
         dEnc :+= (dCk * m("cwk").t) + (dCv * m("cwv").t)
         val dR1 = dR2Pre + (dCq * m("cwq").t)
-        val dR1Pre = lnBwd(dR1, cch.ln1Xhat, cch.ln1Inv,
+        val dR1Pre = layerNormBwd(dR1, cch.ln1Xhat, cch.ln1Inv,
           lay.vec(s"d${l}_ln1_g", p),
           lay.vec(s"d${l}_ln1_g", grad), lay.vec(s"d${l}_ln1_b", grad))
         // causal self-attn backward: r1Pre = x + drop(swo(sCtx))
         val dSOut = masked(dR1Pre, decSelfMask(l))
         gm("swo") :+= cch.sCtx.t * dSOut
-        for (i <- 0 until tE) gb("swo") :+= dSOut(i, ::).t
+        addColSums(gb("swo"), dSOut)
         val dSCtx = dSOut * m("swo").t
         val dSq = DenseMatrix.zeros[Double](tE, d)
         val dSk = DenseMatrix.zeros[Double](tE, d)
@@ -748,24 +698,15 @@ object TransformerAE {
           val dCtxH = dSCtx(::, sl)
           val dA = dCtxH * cch.sv(::, sl).t
           dSv(::, sl) :+= a.t * dCtxH
-          val dScores = DenseMatrix.zeros[Double](tE, tE)
-          for (i <- 0 until tE) {
-            val ai = a(i, ::).t
-            val dai = dA(i, ::).t
-            val dot = sum(ai *:* dai)
-            dScores(i, ::) := ((dai - dot) *:* ai).t
-          }
-          dScores :/= math.sqrt(hd.toDouble)
+          val dScores = softmaxBwd(a, dA, math.sqrt(hd.toDouble))
           dSq(::, sl) :+= dScores * cch.sk(::, sl)
           dSk(::, sl) :+= dScores.t * cch.sq(::, sl)
         }
         gm("swq") :+= cch.x.t * dSq
         gm("swk") :+= cch.x.t * dSk
         gm("swv") :+= cch.x.t * dSv
-        for (i <- 0 until tE) {
-          gb("swq") :+= dSq(i, ::).t; gb("swk") :+= dSk(i, ::).t
-          gb("swv") :+= dSv(i, ::).t
-        }
+        addColSums(gb("swq"), dSq); addColSums(gb("swk"), dSk)
+        addColSums(gb("swv"), dSv)
         dG = dR1Pre + (dSq * m("swq").t) + (dSk * m("swk").t) + (dSv * m("swv").t)
       }
       // g0 = drop(trgProj * scale + pos); trg row 0 is the constant zero
@@ -784,26 +725,26 @@ object TransformerAE {
       def gm(n: String) = lay.mat(s"l${l}_${n}_w", grad)
       def gb(n: String) = lay.vec(s"l${l}_${n}_b", grad)
       // ln2
-      val dRes2Pre = lnBwd(dH, cch.ln2Xhat, cch.ln2Inv,
+      val dRes2Pre = layerNormBwd(dH, cch.ln2Xhat, cch.ln2Inv,
         lay.vec(s"l${l}_ln2_g", p),
         lay.vec(s"l${l}_ln2_g", grad), lay.vec(s"l${l}_ln2_b", grad))
       // res2Pre = res1 + drop(ff2(drop(relu(ff1(res1)))))
       val dFf = masked(dRes2Pre, masks.layer(l).ff)
       gm("ff2") :+= cch.ffAct.t * dFf
-      for (i <- 0 until tE) gb("ff2") :+= dFf(i, ::).t
+      addColSums(gb("ff2"), dFf)
       val dFfAct = dFf * m("ff2").t
       val dFfPre = reluBwd(masked(dFfAct, masks.layer(l).ffIn), cch.ffPre)
       gm("ff1") :+= cch.res1.t * dFfPre
-      for (i <- 0 until tE) gb("ff1") :+= dFfPre(i, ::).t
+      addColSums(gb("ff1"), dFfPre)
       val dRes1 = dRes2Pre + (dFfPre * m("ff1").t)
       // ln1
-      val dRes1Pre = lnBwd(dRes1, cch.ln1Xhat, cch.ln1Inv,
+      val dRes1Pre = layerNormBwd(dRes1, cch.ln1Xhat, cch.ln1Inv,
         lay.vec(s"l${l}_ln1_g", p),
         lay.vec(s"l${l}_ln1_g", grad), lay.vec(s"l${l}_ln1_b", grad))
       // res1Pre = x + drop(wo(ctx))
       val dAttnOut = masked(dRes1Pre, masks.layer(l).attn)
       gm("wo") :+= cch.ctx.t * dAttnOut
-      for (i <- 0 until tE) gb("wo") :+= dAttnOut(i, ::).t
+      addColSums(gb("wo"), dAttnOut)
       val dCtx = dAttnOut * m("wo").t
       val hd = cfg.headDim
       val dQ = DenseMatrix.zeros[Double](tE, d)
@@ -815,24 +756,15 @@ object TransformerAE {
         val dCtxH = dCtx(::, sl)
         val dA = dCtxH * cch.v(::, sl).t
         dV(::, sl) :+= a.t * dCtxH
-        // softmax backward per row
-        val dScores = DenseMatrix.zeros[Double](tE, tE)
-        for (i <- 0 until tE) {
-          val ai = a(i, ::).t
-          val dai = dA(i, ::).t
-          val dot = sum(ai *:* dai)
-          dScores(i, ::) := ((dai - dot) *:* ai).t
-        }
-        dScores :/= math.sqrt(hd.toDouble)
+        val dScores = softmaxBwd(a, dA, math.sqrt(hd.toDouble))
         dQ(::, sl) :+= dScores * cch.k(::, sl)
         dK(::, sl) :+= dScores.t * cch.q(::, sl)
       }
       gm("wq") :+= cch.x.t * dQ
       gm("wk") :+= cch.x.t * dK
       gm("wv") :+= cch.x.t * dV
-      for (i <- 0 until tE) {
-        gb("wq") :+= dQ(i, ::).t; gb("wk") :+= dK(i, ::).t; gb("wv") :+= dV(i, ::).t
-      }
+      addColSums(gb("wq"), dQ); addColSums(gb("wk"), dK)
+      addColSums(gb("wv"), dV)
       dH = dRes1Pre + (dQ * m("wq").t) + (dK * m("wk").t) + (dV * m("wv").t)
     }
     // h0 = drop(srcProj * scale + pos)
@@ -844,7 +776,7 @@ object TransformerAE {
     val dSeqProj = dSrcProj(0 until t, ::)
     lay.mat("linSeq_w", grad) :+= x0.t * dSeqProj
     val dBSeq = lay.vec("linSeq_b", grad)
-    for (i <- 0 until t) dBSeq :+= dSeqProj(i, ::).t
+    addColSums(dBSeq, dSeqProj)
     // x0 was stored dropped; route grads back through the embedding mask
     val dX0 = masked(dSeqProj * lay.mat("linSeq_w", p).t, masks.emb)
     for (i <- 0 until t) {

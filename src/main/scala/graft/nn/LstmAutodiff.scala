@@ -6,7 +6,7 @@ import breeze.numerics.{exp, sigmoid, tanh}
 /**
  * Trainable LSTM encoder (SURVEY.md §2.I11/I12 training path): forward +
  * full BPTT backward over the flat-parameter scheme shared with
- * [[TransformerAE]], so the same broadcast+treeAggregate harness trains
+ * [[TransformerAE]], so the same [[graft.train.EpochLoop]] harness trains
  * either architecture.
  *
  * Objectives, selected by `decoder`:

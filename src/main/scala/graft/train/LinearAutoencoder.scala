@@ -6,12 +6,11 @@ import org.apache.spark.sql.types._
 
 /**
  * Spark-native distributed autoencoder training (SURVEY.md §3.2 rebuild
- * lifecycle): per epoch, broadcast weights -> executors compute per-partition
- * gradient sums -> treeAggregate -> driver applies Adam + schedulers + early
- * stop. This is MLlib's own optimization pattern (e.g. LBFGS), replacing the
+ * lifecycle) through the shared [[EpochLoop]]: per step, executors compute
+ * per-partition gradient sums at the driver's weights -> the driver sums
+ * them and applies Adam + schedulers + early stop — replacing the
  * reference's Horovod-allreduce/Petastorm machinery (spark/large/train.py)
- * with Spark primitives: broadcast = param sync, treeAggregate = allreduce,
- * driver = rank 0.
+ * with Spark primitives (see EpochLoop).
  *
  * The model here is a linear autoencoder (x -> W1 x + b1 -> W2 h + b2 -> x̂,
  * squared loss) — closed-form gradients, exactly distributed. The
@@ -98,7 +97,7 @@ object LinearAutoencoder {
     val weighted = weightCol.isDefined
 
     val w = AeWeights.init(nIn, nHidden, cfg.seed)
-    val res = EpochLoop.run(data, w.params, cfg, batchSize, examplesPerEpoch,
+    val res = try EpochLoop.run(data, w.params, cfg, batchSize, examplesPerEpoch,
       (p, a, x: Array[Double]) => {
         val wt = AeWeights(nIn, nHidden, p)
         val wgt = if (weighted) x(nIn) else 1.0
@@ -149,7 +148,7 @@ object LinearAutoencoder {
         0.5 * loss
       }),
       weight = if (weighted) Some((x: Array[Double]) => x(nIn)) else None)
-    data.unpersist()
+    finally data.unpersist()
     TrainResult(w, res.losses, res.stoppedAt)
   }
 

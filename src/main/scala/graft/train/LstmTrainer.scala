@@ -41,27 +41,18 @@ object LstmTrainer {
         InputColumns(seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols), labelCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val params = cfg.initParams()
-    // per-example dropout seed (see TransformerTrainer.fit); probe
+    // dropout masks draw from EpochLoop's per-example seed; the probe
     // evaluates with dropout off (inference behavior)
-    val lossGradFn = {
-      var calls = 0L
-      (p: Array[Double], a: Array[Double], ex: Example) => {
-        calls += 1
-        val (e, label) = ex
-        val ds = train.seed ^ (calls * 0x9E3779B97F4A7C15L) ^
-          java.util.Arrays.deepHashCode(e.seqCat.asInstanceOf[Array[AnyRef]])
-        LstmAE.lossGradEmbed(cfg, lay, p, a, e.seqCat, e.seqCont, e.nsCat, e.nsCont,
-          label, dropSeed = ds)._1
-      }
-    }
     val cfgEval = cfg.copy(dropout = 0.0)
-    val res = EpochLoop.run(data, params, train, batchSize, examplesPerEpoch,
-      lossGradFn,
+    val res = try EpochLoop.runSeeded(data, params, train, batchSize, examplesPerEpoch,
+      (p: Array[Double], a: Array[Double], ex: Example, seed: Long) =>
+        LstmAE.lossGradEmbed(cfg, lay, p, a, ex._1.seqCat, ex._1.seqCont,
+          ex._1.nsCat, ex._1.nsCont, ex._2, dropSeed = seed)._1,
       lossOnly = Some((p: Array[Double], ex: Example) =>
         LstmAE.lossGradEmbed(cfgEval, lay, p, null, ex._1.seqCat, ex._1.seqCont,
           ex._1.nsCat, ex._1.nsCont, ex._2)._1),
       frozenRanges = cfg.frozenRanges)
-    data.unpersist()
+    finally data.unpersist()
     Result(cfg, params, res.losses, res.stoppedAt)
   }
 

@@ -4,7 +4,7 @@ package graft.train
  * Driver-side optimizer state (SURVEY.md §2.J): Adam, linear warmup,
  * reduce-on-plateau, early stopping — the reference's scheduler stack
  * (train.py:120-130,133-193; early_stopping.py:11-102) as plain Scala.
- * Weights live on the driver; executors only ever see broadcast copies.
+ * Weights live on the driver; executors only ever see serialized copies.
  */
 final class Adam(n: Int, beta1: Double = 0.9, beta2: Double = 0.999, eps: Double = 1e-8,
     frozen: Seq[(Int, Int)] = Nil) {

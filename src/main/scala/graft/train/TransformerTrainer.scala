@@ -43,31 +43,19 @@ object TransformerTrainer {
         InputColumns(seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols), labelCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val params = cfg.initParams()
-    // per-example dropout seed: content hash x call counter x train seed —
-    // deterministic for a given partition order, varies across epochs (the
-    // epoch shuffle re-slices, changing each example's call position)
-    val lossGradFn = {
-      var calls = 0L
-      (p: Array[Double], a: Array[Double], ex: Example) => {
-        calls += 1
-        val (e, label) = ex
-        val ds = train.seed ^ (calls * 0x9E3779B97F4A7C15L) ^
-          java.util.Arrays.deepHashCode(e.seqCat.asInstanceOf[Array[AnyRef]])
-        TransformerAE.lossAndGrad(cfg, lay, p, a,
-          e.seqCat, e.seqCont, nsCat = e.nsCat, nsCont = e.nsCont, label = label,
-          dropSeed = ds)
-      }
-    }
     // the monitoring probe evaluates WITHOUT dropout (inference behavior,
     // keeps the early-stop signal noise-free); layout is dropout-independent
     val cfgEval = cfg.copy(dropout = 0.0)
-    val res = EpochLoop.run(data, params, train, batchSize, examplesPerEpoch,
-      lossGradFn,
+    // dropout masks draw from EpochLoop's per-example seed
+    val res = try EpochLoop.runSeeded(data, params, train, batchSize, examplesPerEpoch,
+      (p: Array[Double], a: Array[Double], ex: Example, seed: Long) =>
+        TransformerAE.lossAndGrad(cfg, lay, p, a, ex._1.seqCat, ex._1.seqCont,
+          nsCat = ex._1.nsCat, nsCont = ex._1.nsCont, label = ex._2, dropSeed = seed),
       lossOnly = Some((p: Array[Double], ex: Example) =>
         TransformerAE.lossAndGrad(cfgEval, lay, p, null, ex._1.seqCat, ex._1.seqCont,
           nsCat = ex._1.nsCat, nsCont = ex._1.nsCont, label = ex._2)),
       frozenRanges = cfg.frozenRanges)
-    data.unpersist()
+    finally data.unpersist()
     Result(cfg, params, res.losses, res.stoppedAt)
   }
 

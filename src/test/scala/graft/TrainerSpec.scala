@@ -1,7 +1,10 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.nn.AeConfig
-import graft.train.{TrainConfig, TransformerTrainer}
+import graft.train.{Adam, EarlyStopping, EpochLoop, LrSchedule, TrainConfig, TransformerTrainer}
 
 /** Distributed transformer-AE training on the real featurized fixture. */
 class TrainerSpec extends SparkSpec {
@@ -233,5 +236,135 @@ class TrainerSpec extends SparkSpec {
       (p, a, x) => { val e = p(0) - x; a(0) += e; 0.5 * e * e })
     assert(res.losses.size == 3)
     assert(res.losses.last < res.losses.head) // full-batch steps still learn
+  }
+
+  test("EpochLoop multi-step epochs equal a driver replay of the step draws and Adam") {
+    val sc = spark.sparkContext
+    val xs = (0 until 600).map(i => 1.0 + math.sin(i.toDouble))
+    val data = sc.parallelize(xs, 3)
+    val cfg = TrainConfig(lr = 5e-2, maxEpochs = 3, warmupEpochs = 1, patience = 10)
+    val nSteps = 6 // 600 examples / batch 100; k = min(4, 100 / 8) tasks per step
+    val lg = (p: Array[Double], a: Array[Double], x: Double) => {
+      val e = p(0) - x; a(0) += e; 0.5 * e * e
+    }
+    val params = Array(0.25)
+    val res = EpochLoop.run[Double](data, params, cfg, batchSize = 100,
+      examplesPerEpoch = None, lg)
+
+    // replay: one Random(epochSeed + partition) per map partition draws each
+    // example's step in partition order; one Adam step per non-empty slice
+    val parts = data.glom().collect()
+    val p = Array(0.25)
+    val adam = new Adam(1)
+    val sched = new LrSchedule(cfg.lr, cfg.warmupEpochs)
+    val stopper = new EarlyStopping(cfg.patience, cfg.delta)
+    val losses = ArrayBuffer[Double]()
+    for (epoch <- 0 until cfg.maxEpochs) {
+      val es = EpochLoop.epochSeed(cfg.seed, epoch)
+      val slices = Array.fill(nSteps)(ArrayBuffer[Double]())
+      parts.zipWithIndex.foreach { case (part, pi) =>
+        val rng = new java.util.Random(es + pi)
+        part.foreach(x => slices(rng.nextInt(nSteps)) += x)
+      }
+      var lossSum = 0.0
+      var cnt = 0.0
+      slices.filter(_.nonEmpty).foreach { sl =>
+        val a = Array(0.0)
+        sl.foreach(x => lossSum += lg(p, a, x))
+        adam.step(p, Array(a(0) / sl.size), sched.lr(epoch))
+        cnt += sl.size
+      }
+      val mean = lossSum / cnt
+      sched.observe(mean)
+      losses += mean
+      assert(!stopper.observe(epoch, mean))
+    }
+    assert(res.losses.size == losses.size)
+    res.losses.zip(losses).foreach { case (got, want) =>
+      assert(math.abs(got - want) < 1e-12, s"loss $got != replay $want") }
+    assert(math.abs(params(0) - p(0)) < 1e-12, s"param ${params(0)} != replay ${p(0)}")
+  }
+
+  test("EpochLoop step jobs launch min(defaultParallelism, slice / 8) tasks") {
+    val sc = spark.sparkContext
+    val tag = "graft.test.epochloop"
+    val resultTasks = ArrayBuffer[Int]() // per tagged job: tasks of its result stage
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(tag) != null)
+          resultTasks.synchronized { resultTasks += js.stageInfos.maxBy(_.stageId).numTasks }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // (examples, batch size): slices of 400 fill every core, slices of 16
+      // get 16 / 8 = 2 tasks
+      for ((n, batch) <- Seq((2000, 400), (64, 16))) {
+        val nSteps = n / batch
+        val want = math.min(sc.defaultParallelism, batch / 8)
+        resultTasks.synchronized(resultTasks.clear())
+        sc.setLocalProperty(tag, s"$n/$batch")
+        try EpochLoop.run[Double](sc.parallelize(Seq.tabulate(n)(_.toDouble), 8),
+          Array(0.0), TrainConfig(lr = 1e-2, maxEpochs = 1), batchSize = batch,
+          examplesPerEpoch = None,
+          (p, a, x) => { val e = p(0) - x; a(0) += e; 0.5 * e * e })
+        finally sc.setLocalProperty(tag, null)
+        // count() first, then one job per step
+        val deadline = System.currentTimeMillis() + 10000
+        while (resultTasks.synchronized(resultTasks.size) < 1 + nSteps &&
+            System.currentTimeMillis() < deadline) Thread.sleep(20)
+        val steps = resultTasks.synchronized(resultTasks.toList).drop(1)
+        assert(steps == List.fill(nSteps)(want), s"n=$n batch=$batch: step tasks $steps")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("EpochLoop hands lossGrad the documented per-example seed on both paths") {
+    val sc = spark.sparkContext
+    val data = sc.parallelize(Seq.tabulate(300)(_.toDouble), 3)
+    val parts = data.glom().collect()
+    val cfg = TrainConfig(lr = 1e-2, maxEpochs = 2, patience = 5, seed = 7L)
+    for (batch <- Seq(50, 0)) { // six steps per epoch; one full-batch step
+      val seen = sc.collectionAccumulator[(Double, Long)]("seeds")
+      EpochLoop.runSeeded[Double](data, Array(0.0), cfg, batchSize = batch,
+        examplesPerEpoch = None,
+        (p, a, x, seed) => { seen.add((x, seed)); val e = p(0) - x; a(0) += e; 0.5 * e * e })
+      val want = for {
+        epoch <- 0 until cfg.maxEpochs
+        (part, pi) <- parts.zipWithIndex.toSeq
+        (x, i) <- part.zipWithIndex.toSeq
+      } yield (x, EpochLoop.exampleSeed(EpochLoop.epochSeed(cfg.seed, epoch), pi, i))
+      import scala.jdk.CollectionConverters._
+      assert(seen.value.asScala.toSeq.sorted == want.sorted, s"batch $batch")
+    }
+  }
+
+  test("a fit whose loss throws leaves no cached RDD behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // examplesPerEpoch below the corpus size makes EpochLoop cache a probe
+    intercept[Exception] {
+      EpochLoop.run[Double](sc.parallelize(Seq.tabulate(200)(_.toDouble), 4),
+        Array(0.0), TrainConfig(maxEpochs = 1), batchSize = 50,
+        examplesPerEpoch = Some(100),
+        (_, _, _) => throw new IllegalStateException("loss failed"))
+    }
+    assert(sc.getPersistentRDDs.keySet == before, "EpochLoop's probe leaked")
+    // the trainers cache their examples: three cont features declared, two
+    // given, so the first lossGrad indexes past the example's arrays
+    val wide = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
+    val catCols = Seq((1 to 5).map(t => s"event_type_$t"))
+    val contCols = Seq("value", "ts_days").map(c => (1 to 5).map(t => s"${c}_$t"))
+    val before2 = sc.getPersistentRDDs.keySet
+    intercept[Exception] {
+      TransformerTrainer.fit(wide, AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8,
+        seqLen = 5, vocabSizes = Seq(6), nCont = 3), catCols, contCols,
+        TrainConfig(lr = 1e-2, maxEpochs = 1))
+    }
+    intercept[Exception] {
+      graft.train.LstmTrainer.fit(wide, graft.nn.LstmAeConfig(hidden = 8, outDim = 8,
+        attnDim = 4, seqLen = 5, vocabSizes = Seq(6), nCont = 3), catCols, contCols,
+        TrainConfig(lr = 1e-2, maxEpochs = 1))
+    }
+    assert(sc.getPersistentRDDs.keySet == before2, "a trainer's examples leaked")
   }
 }
